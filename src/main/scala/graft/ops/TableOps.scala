@@ -70,8 +70,11 @@ object TableOps extends QueryModule {
     * first resolution and caches it, so the conf must be set before any
     * `snap.…` query and never changed after). Each op creates its own
     * uniquely-named table under it, so ops stay independently re-runnable.
+    * Streaming reads of path-only tables resolve through the same catalog
+    * (``readStream.table(s"snap.`$root`")``), so every streaming op
+    * registers it here too.
     */
-  private def sqlWarehouse(
+  private[graft] def sqlWarehouse(
       s: org.apache.spark.sql.SparkSession): String = this.synchronized {
     s.conf.getOption("spark.sql.catalog.snap.root").getOrElse {
       val b = graft.Tmp.dir("graft_snapcat")
@@ -732,14 +735,10 @@ object TableOps extends QueryModule {
       // files a commit added (the Delta-streaming idea re-derived).
       // Three commits land before the stream starts; AvailableNow drains
       // them through the version-offset path into a windowless
-      // aggregation. Runs on the NATIVE DSv2 path
-      // (`readStream.table("snap.db.t")`, SnapMicroBatch) — the V1
-      // `format("snapstream")` entry point stays only as a legacy shim
-      // with its one-window-per-AvailableNow limitation documented; no
-      // shipped op depends on it for draining anymore. SnapStreamSpec
-      // pins the incremental contracts (checkpoint resumption,
-      // changes-only startingVersion, rewrite guard) that this one-shot
-      // oracle can't see.
+      // aggregation (`readStream.table("snap.db.t")`, SnapMicroBatch).
+      // SnapStreamSpec pins the incremental contracts (checkpoint
+      // resumption, changes-only startingVersion, rewrite guard) that
+      // this one-shot oracle can't see.
       (s, dir) => {
         sqlWarehouse(s)
         val t = freshName()
@@ -773,8 +772,8 @@ object TableOps extends QueryModule {
     Q(
       "table_stream_pipeline",
       // TABLE-TO-TABLE incremental pipeline, exactly-once end to end:
-      // snapstream tails the upstream table's commit log (source side
-      // exactly-once: version offsets in the checkpoint), a stateless
+      // the streaming read tails the upstream table's commit log (source
+      // side exactly-once: version offsets in the checkpoint), a stateless
       // transform runs per batch, and foreachBatch lands each batch in a
       // DOWNSTREAM SnapTable via appendOnce keyed by batchId — so a
       // retried batch is a no-op commit (sink side idempotent). This is
@@ -783,9 +782,7 @@ object TableOps extends QueryModule {
       // the downstream version history audits the upstream batches.
       // The stream runs TWICE on one checkpoint (upstream grows between
       // runs) to exercise the incremental path, not just the snapshot.
-      // The upstream tail runs on the NATIVE DSv2 path
-      // (`readStream.table`, SnapMicroBatch) — no shipped op depends on
-      // the legacy V1 source's one-window AvailableNow behavior.
+      // The upstream tail is `readStream.table` (SnapMicroBatch).
       (s, dir) => {
         sqlWarehouse(s)
         val up = freshName()
@@ -1001,25 +998,26 @@ object TableOps extends QueryModule {
     ),
     Q(
       "table_stream_cdc",
-      // STREAMING CHANGE FEED (snapstream readChangeFeed=true — the
-      // Delta-CDF idea on the manifest diff): each drained batch emits
-      // the SIGNED file-level delta (+1 added-file rows, −1 removed-file
-      // rows), so a downstream linear aggregate is maintained through
-      // appends AND deletes/rewrites — copied rows cancel, removed rows
-      // subtract. Three commits (create, append, predicate DELETE) are
-      // each drained through one checkpoint; the maintained view (net
-      // signed sums) must equal the live table, with the deleted group
-      // netting to zero. IO per drain is the commit's file diff, never a
-      // table rescan — incremental view maintenance at commit cost.
+      // STREAMING CHANGE FEED (the `.changes` companion of a path-only
+      // table — the Delta-CDF idea on the manifest diff): each drained
+      // batch emits the SIGNED file-level delta (+1 added-file rows, −1
+      // removed-file rows), so a downstream linear aggregate is
+      // maintained through appends AND deletes/rewrites — copied rows
+      // cancel, removed rows subtract. Three commits (create, append,
+      // predicate DELETE) are each drained through one checkpoint; the
+      // maintained view (net signed sums) must equal the live table,
+      // with the deleted group netting to zero. IO per drain is the
+      // commit's file diff, never a table rescan — incremental view
+      // maintenance at commit cost.
       (s, dir) => {
+        sqlWarehouse(s)
         val root = graft.Tmp.dir("graft_cdc_tab")
         val sink = graft.Tmp.dir("graft_cdc_sink")
         val ckpt = graft.Tmp.dir("graft_cdc_ckpt")
         val ev = T(s, dir, "events")
           .select(col("event_id"), col("event_type"), col("value"))
         def drain(): Unit = graft.StreamRun.withStateParts(s) {
-          val q = s.readStream.format("snapstream")
-            .option("readChangeFeed", "true").load(root)
+          val q = s.readStream.table(s"snap.`$root`.changes")
             .writeStream.format("parquet")
             .option("path", sink).option("checkpointLocation", ckpt)
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1518,7 +1516,7 @@ object TableOps extends QueryModule {
     ),
     Q(
       "table_stream_upsert",
-      // STREAMING UPSERT sink, exactly-once: snapstream tails the
+      // STREAMING UPSERT sink, exactly-once: the streaming read tails the
       // upstream commit log and foreachBatch lands each batch through
       // mergeOnce keyed by batchId — the merge-verb twin of the
       // appendOnce pipeline. A redelivered batch is a no-op txn hit; a
@@ -1527,13 +1525,14 @@ object TableOps extends QueryModule {
       // 100 TB dimension table maintained by key from a change feed,
       // each hop costing O(batch) + O(files holding matched keys).
       (s, dir) => {
+        sqlWarehouse(s)
         val up = graft.Tmp.dir("graft_ups_up")
         val down = graft.Tmp.dir("graft_ups_down")
         val ckpt = graft.Tmp.dir("graft_ups_ckpt")
         val orders = T(s, dir, "orders").select(
           col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         def hop(): Unit = graft.StreamRun.withStateParts(s) {
-          val q = s.readStream.format("snapstream").load(up)
+          val q = s.readStream.table(s"snap.`$up`")
             .writeStream
             .option("checkpointLocation", ckpt)
             .foreachBatch { (b: org.apache.spark.sql.DataFrame,
@@ -2493,7 +2492,7 @@ object TableOps extends QueryModule {
       "table_stream_native_sink",
       // NATIVE streaming sink: writeStream.toTable("snap.db.t") — one
       // ACID append commit per micro-batch, exactly once, with ZERO
-      // foreachBatch glue (the sink twin of the snapstream source).
+      // foreachBatch glue (the sink twin of the streaming read).
       // Exactly-once rides the (queryId, epochId) idempotency txn: a
       // restart that replays a committed epoch resolves to its recorded
       // version and links nothing. At 100 TB this is the ingest spine:
@@ -2510,7 +2509,7 @@ object TableOps extends QueryModule {
         s.sql(s"CREATE TABLE snap.main.$t " +
           "(o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE)")
         def hop(): Unit = graft.StreamRun.withStateParts(s) {
-          val q = s.readStream.format("snapstream").load(up)
+          val q = s.readStream.table(s"snap.`$up`")
             .writeStream.option("checkpointLocation", ckpt)
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .toTable(s"snap.main.$t")
@@ -2608,7 +2607,7 @@ object TableOps extends QueryModule {
           "(o_orderstatus STRING, n BIGINT, cents BIGINT)")
         val dst = s.conf.get("spark.sql.catalog.snap.root") + s"/main/$t"
         def refresh(): Unit = graft.StreamRun.withStateParts(s) {
-          val q = s.readStream.format("snapstream").load(up)
+          val q = s.readStream.table(s"snap.`$up`")
             .groupBy(col("o_orderstatus"))
             .agg(count(lit(1)).as("n"),
               sum(round(col("o_totalprice") * 100).cast("long"))

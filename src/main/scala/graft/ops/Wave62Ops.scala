@@ -368,7 +368,7 @@ object Wave62Ops extends QueryModule {
       "stream_cdc_index",
       // the LANDING-TABLE transport for the same ingest: embeddings
       // land as SnapTable COMMITS (create, then append), the index
-      // pipeline subscribes to the table's commit feed (`snapstream`)
+      // pipeline subscribes to the table's commit feed (`readStream.table`)
       // through one checkpoint, and each drained commit runs the
       // identical VecStreamIndex probe+absorb. Same deterministic
       // result as the file transport, so the oracle is shared verbatim
@@ -382,8 +382,9 @@ object Wave62Ops extends QueryModule {
         val ckpt = graft.Tmp.dir("graft_cdcidx_ckpt")
         val (route, gridded, _) = semdedupGeometry(s, dir)
         VecStreamIndex.setup(s, txroot, gridded, route)
+        TableOps.sqlWarehouse(s)
         def drain(): Unit = graft.StreamRun.withStateParts(s) {
-          val q = s.readStream.format("snapstream").load(landing)
+          val q = s.readStream.table(s"snap.`$landing`")
             .writeStream
             .option("checkpointLocation", ckpt)
             .foreachBatch { (b: DataFrame, id: Long) =>

@@ -790,8 +790,9 @@ object Wave65Ops extends QueryModule {
         // bootstrap token order from the full corpus — the same
         // frozen-geometry source semdedupGeometry uses for centroids
         LiveFunnel.setup(s, txroot, landingDf.limit(0), route, docs)
+        TableOps.sqlWarehouse(s)
         def drain(): Unit = {
-          val q = s.readStream.format("snapstream").load(landing)
+          val q = s.readStream.table(s"snap.`$landing`")
             .writeStream
             .option("checkpointLocation", ckpt)
             .foreachBatch { (b: DataFrame, id: Long) =>

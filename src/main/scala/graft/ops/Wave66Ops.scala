@@ -270,8 +270,9 @@ object Wave66Ops extends QueryModule {
         val ckpt = Tmp.dir("graft_refreeze_ckpt")
         LiveFunnel.setup(s, txroot, landingDf.limit(0), route,
           docs.filter(col("doc_id") < 25))
+        TableOps.sqlWarehouse(s)
         def drain(): Unit = {
-          val q = s.readStream.format("snapstream").load(landing)
+          val q = s.readStream.table(s"snap.`$landing`")
             .writeStream
             .option("checkpointLocation", ckpt)
             .foreachBatch { (b: DataFrame, id: Long) =>

@@ -187,6 +187,10 @@ class SnapCatalog extends TableCatalog with SupportsNamespaces
       TableCatalogCapability.SUPPORTS_CREATE_TABLE_WITH_GENERATED_COLUMNS,
       TableCatalogCapability.SUPPORTS_CREATE_TABLE_WITH_IDENTITY_COLUMNS)
 
+  /** An absolute-path name resolves to that path (`resolve("/abs")` is
+    * `/abs`), so ``snap.`/abs/path` `` reaches a path-only table — the
+    * streaming read of tables outside the warehouse relies on it.
+    */
   private def tableDir(ident: Identifier): String =
     (ident.namespace() :+ ident.name())
       .foldLeft(Paths.get(base))(_.resolve(_)).toString

@@ -16,15 +16,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Schema = the base table's columns plus `_sign INT` (+1 added row,
   * −1 removed row) and `_version BIGINT` (the commit that changed it) —
-  * the SIGNED delta form (SnapTable.changesDelta / the V1 source's
-  * `readChangeFeed`): rows a rewrite merely copied cancel under any
-  * linear aggregate, so a downstream sum/count view is maintained
-  * incrementally through merges, deletes and compactions.
+  * the SIGNED delta form (SnapTable.changesDelta): rows a rewrite
+  * merely copied cancel under any linear aggregate, so a downstream
+  * sum/count view is maintained incrementally through merges, deletes
+  * and compactions.
   *
-  * This closes the V2 gap the native streaming read documented
-  * ("readChangeFeed stays on the V1 source"): a companion TABLE carries
-  * the widened schema through analysis, which reader OPTIONS on the
-  * base table never could — the Iceberg metadata-table idea.
+  * A companion TABLE carries the widened schema through analysis, which
+  * reader OPTIONS on the base table never could — the Iceberg
+  * metadata-table idea. A path-only table's feed is
+  * ``readStream.table("snap.`/abs/path`.changes")``.
   *
   * Layout/scale: each (version, sign) leg plans through the SAME
   * [[SnapBatchScan]] machinery as batch reads (byte-range splits,
@@ -113,7 +113,7 @@ private[sources] class SnapChangesScan(spark: SparkSession, root: String,
   * discovered snapshot, all +1 (initial load of the downstream view);
   * every later batch is the per-version signed diff up to the current
   * head. `startingVersion` skips the initial load and starts the diff
-  * feed at that commit, exactly like the V1 source.
+  * feed at that commit, like the tail's `startingVersion`.
   */
 private[sources] class SnapChangesStream(spark: SparkSession,
     root: String, snapAtStart: SnapTable.Snapshot, base: StructType,

@@ -15,8 +15,12 @@ private[graft] final case class SnapOffset(v: Int) extends Offset {
   override def json(): String = v.toString
 }
 
-/** NATIVE DSv2 streaming source over a catalog [[SnapTable]] —
-  * `spark.readStream.table("snap.db.t")`, no format string, no path:
+/** THE streaming read of a [[SnapTable]] —
+  * `spark.readStream.table("snap.db.t")`, no format string. A table
+  * outside the warehouse streams by its absolute path as the identifier
+  * (``readStream.table("snap.`/abs/path`")``; the catalog resolves an
+  * absolute name to that directory), so path-only tables need no
+  * second source:
   *
   * {{{
   *   spark.readStream
@@ -26,18 +30,17 @@ private[graft] final case class SnapOffset(v: Int) extends Offset {
   *     .writeStream...trigger(Trigger.AvailableNow())...
   * }}}
   *
-  * Same tail-the-commit-log semantics as the V1 `snapstream` source
-  * ([[SnapTail]] is shared — full snapshot first, manifest-diff
-  * increments, rewrite guard, `startingVersion`, `ignoreChanges`), but
-  * planned as a real `MicroBatchStream`, which buys what the V1 shape
-  * cannot express:
+  * Offsets are table versions: the first batch is the full snapshot,
+  * later batches are manifest-diff increments ([[SnapTail]], shared with
+  * the change feed), with the rewrite guard, `startingVersion` /
+  * `startingTimestamp` and `ignoreChanges`. Planned as a real
+  * `MicroBatchStream`, which buys:
   *
   *  - **`SupportsTriggerAvailableNow`**: the run captures the log head
   *    at start and drains up to it in MULTIPLE rate-limited batches —
   *    with `maxVersionsPerTrigger=m` a weekend backlog of n commits
   *    becomes ⌈n/m⌉ bounded batches in ONE `Trigger.AvailableNow()`
-  *    run, where the V1 fallback drained a single capped window and
-  *    stopped (SURVEY §13.4's known gap, closed here).
+  *    run.
   *  - **`SupportsAdmissionControl`**: rate limiting is a first-class
   *    planner contract instead of a `getOffset` side effect, and
   *    commits that land DURING the run are excluded by the captured
@@ -47,19 +50,19 @@ private[graft] final case class SnapOffset(v: Int) extends Offset {
   *    applies PER MICRO-BATCH (`pruneFiles`), so a filtered stream
   *    over a day-clustered table skips non-matching ingest files from
   *    the driver, and the parquet readers decode only required
-  *    columns. The V1 source always emitted full-schema batches.
+  *    columns.
   *
   * Batches read through the same machinery as batch scans
   * ([[SnapBatchScan]]'s split/bin-pack partitioning and vectorized
   * parquet readers, column mapping and initial-default fill included),
   * so streaming inherits every reader-side invariant from one code
-  * path. The change feed (`readChangeFeed`) stays on the V1 source —
-  * its signed union is a DataFrame-level shape.
+  * path. The signed change feed streams from the `<table>.changes`
+  * companion ([[SnapChangesStream]]).
   *
   * Restart contract: schema, column mapping and defaults are captured
   * when the stream is created; a mapping or defaults change while the
   * stream runs fails the batch (restart from a fresh checkpoint), like
-  * Delta and the V1 twin.
+  * Delta.
   */
 private[graft] class SnapMicroBatchStream(
     spark: SparkSession, root: String,
@@ -173,7 +176,7 @@ private[graft] class SnapMicroBatchStream(
   /** A per-batch [[SnapBatchScan]] under the CAPTURED schema/mapping/
     * defaults. `dvs` is always empty: a DV-bearing history either
     * refused the tail (default) or reads file contents wholesale
-    * (`ignoreChanges`, at-least-once — the documented V1 contract).
+    * (`ignoreChanges`, at-least-once).
     * `bucket` is None — a micro-batch is an ingest increment, not the
     * keyed whole table, so it must not claim KeyGroupedPartitioning.
     */
@@ -184,4 +187,77 @@ private[graft] class SnapMicroBatchStream(
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
+}
+
+/** The tail-diff arithmetic both streaming reads share (the
+  * [[SnapMicroBatchStream]] tail above and the [[SnapChangesStream]]
+  * change feed): which files a consumed-version window delivers, and
+  * which histories refuse to tail.
+  */
+private[sources] object SnapTail {
+
+  /** Files added between snapshot `from` and snapshot `to`, as a
+    * HEAD-TO-HEAD manifest diff (files(to) minus files(from)) — not a
+    * per-intermediate-version walk. That makes the batch a pure function
+    * of the two consumed offsets: intermediate slots a SnapTxn prepare
+    * orphaned (or a vacuum dropped) can't distort it, and an
+    * added-then-rewritten file WITHIN the range coalesces to its final
+    * form instead of emitting stale rows. The rewrite guard compares the
+    * same two endpoints: a file of `from` missing in `to` means history
+    * was rewritten, which needs `ignoreChanges` to stream through.
+    * `from = None` is the initial load: the whole snapshot at `to`.
+    */
+  def addedBetween(root: String, from: Option[Int], to: Int,
+      ignoreChanges: Boolean): Seq[SnapTable.FileEntry] = {
+    val fromFiles = from match {
+      case None => Seq.empty[SnapTable.FileEntry]
+      case Some(v) =>
+        if (!SnapTable.versions(root).contains(v))
+          throw new IllegalStateException(
+            s"streaming read: consumed version $v was vacuumed from the " +
+              "log — the stream can no longer prove what it has read; " +
+              "restart from a fresh checkpoint (and retain at least the " +
+              "consumed version when vacuuming a tailed table)")
+        SnapTable.load(root, v).files
+    }
+    val toSnap = SnapTable.load(root, to)
+    if (toSnap.dvs.nonEmpty && !ignoreChanges)
+      throw new IllegalStateException(
+        "streaming read: the snapshot carries merge-on-read deletion " +
+          "vectors, which file-level tailing cannot see — compact() to " +
+          "materialize them, or set ignoreChanges=true to stream the " +
+          "file contents (deleted rows included, at-least-once)")
+    val fromPaths = fromFiles.map(_.path).toSet
+    val removed = fromPaths.diff(toSnap.files.map(_.path).toSet)
+    if (removed.nonEmpty && !ignoreChanges)
+      throw new IllegalStateException(
+        s"streaming read: between versions ${from.get} and $to (head op " +
+          s"'${toSnap.op}') ${removed.size} file(s) were removed — the " +
+          "table was rewritten, not appended to. Restart from a fresh " +
+          "checkpoint for a new snapshot, set ignoreChanges=true to " +
+          "re-emit rewritten files (at-least-once for their rows), or " +
+          "tail the signed feed of the `<table>.changes` companion")
+    toSnap.files.filterNot(f => fromPaths.contains(f.path))
+  }
+
+  /** The latest retained version STRICTLY below `v` (None when none is —
+    * then the base is the empty table): the changes-only anchor for
+    * `startingVersion`, tolerant of vacuumed/skipped slots below it.
+    */
+  def baseBelow(root: String, v: Int): Option[Int] =
+    SnapTable.versions(root).filter(_ < v).lastOption
+
+  /** `startingTimestamp` → the earliest version committed AT OR AFTER
+    * it (Delta's startingTimestamp contract) — all older → one past
+    * the head, i.e. only future commits stream. Accepts epoch millis
+    * or `yyyy-MM-dd HH:mm:ss[.f]`.
+    */
+  def startingVersionAt(root: String, ts: String): Int = {
+    val ms =
+      if (ts.forall(_.isDigit)) ts.toLong
+      else java.sql.Timestamp.valueOf(ts).getTime
+    SnapTable.versions(root)
+      .find(v => SnapTable.load(root, v).ts >= ms)
+      .getOrElse(SnapTable.latestVersion(root) + 1)
+  }
 }

@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
 /** Native Structured-Streaming SINK for the snapshot table format — the
-  * other half of the streaming story ([[SnapStreamSource]] is the read
-  * half): `df.writeStream.toTable("snap.db.t")` appends one ACID commit
+  * other half of the streaming story ([[SnapMicroBatchStream]] is the
+  * read half): `df.writeStream.toTable("snap.db.t")` appends one ACID commit
   * per micro-batch with EXACTLY-ONCE semantics, no foreachBatch glue.
   *
   * How exactly-once falls out of machinery the format already has:

@@ -56,33 +56,6 @@ object Bridge {
     org.apache.spark.sql.connector.catalog.CatalogV2Util
       .v2ColumnsToStructType(cols)
 
-  /** A batch of parquet files as a STREAMING-flagged DataFrame — what a V1
-    * streaming `Source.getBatch` must return (MicroBatchExecution asserts
-    * `isStreaming`). Exactly FileStreamSource's own shape: resolve a
-    * parquet relation over the explicit file list, wrap it in a
-    * `LogicalRelation(isStreaming = true)`. The batch still plans through
-    * the native vectorized parquet reader with pushdown and codegen.
-    */
-  def streamingParquet(spark: SparkSession, paths: Seq[String],
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    if (paths.isEmpty)
-      classic.Dataset.ofRows(cs,
-        org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
-          org.apache.spark.sql.catalyst.types.DataTypeUtils
-            .toAttributes(schema),
-          Seq.empty, isStreaming = true))
-    else {
-      val rel = org.apache.spark.sql.execution.datasources.DataSource(
-        cs, className = "parquet", paths = paths,
-        userSpecifiedSchema = Some(schema))
-        .resolveRelation(checkFilesExist = false)
-      classic.Dataset.ofRows(cs,
-        org.apache.spark.sql.execution.datasources.LogicalRelation(
-          rel, isStreaming = true))
-    }
-  }
-
   /** `df.localCheckpoint()` with the checkpoint's INHERITED statistics
     * replaced by the honest size of the materialized blocks.
     *

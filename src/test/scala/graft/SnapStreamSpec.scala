@@ -1,17 +1,35 @@
 package graft
 
-import graft.sources.SnapTable
+import graft.sources.{SnapMicroBatchStream, SnapOffset, SnapTable}
+import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The snapstream source: version-offset tailing of a SnapTable commit
-  * log — snapshot-consistent first batch, incremental exactly-once
-  * resumption from the checkpoint, and the rewrite guard.
+/** The streaming read of a SnapTable (`readStream.table`, planned by
+  * SnapMicroBatchStream): version-offset tailing of the commit log —
+  * snapshot-consistent first batch, incremental exactly-once resumption
+  * from the checkpoint, the rewrite guard — plus the native sinks and the
+  * `.changes` feed. Path-only tables stream by their absolute path as the
+  * identifier.
   */
 class SnapStreamSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
+
+  graft.ops.TableOps.sqlWarehouse(spark)
+
+  /** The catalog name of a path-only table. */
+  private def byPath(root: String): String = s"snap.`$root`"
+
+  /** A native stream over `root` driven directly, as the planner would. */
+  private def microBatch(root: String, startingVersion: Option[Int] = None,
+      maxVersionsPerTrigger: Option[Int] = None): SnapMicroBatchStream = {
+    val snap = SnapTable.load(root, SnapTable.latestVersion(root))
+    new SnapMicroBatchStream(spark, root,
+      SnapTable.schemaOf(snap.schemaJson), Seq.empty, identity,
+      ignoreChanges = false, startingVersion, maxVersionsPerTrigger)
+  }
 
   private def df(ks: Range, tag: String) =
     ks.map(k => (k.toLong, tag)).toDF("k", "v")
@@ -22,9 +40,9 @@ class SnapStreamSpec extends AnyFunSuite {
   private def drain(root: String, sink: String, ckpt: String,
       ignoreChanges: Boolean = false): Unit =
     StreamRun.withStateParts(spark) {
-      val reader = spark.readStream.format("snapstream")
-      val q = (if (ignoreChanges) reader.option("ignoreChanges", "true")
-        else reader).load(root)
+      val q = spark.readStream
+        .option("ignoreChanges", ignoreChanges.toString)
+        .table(byPath(root))
         .writeStream.format("parquet")
         .option("path", sink).option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
@@ -62,8 +80,8 @@ class SnapStreamSpec extends AnyFunSuite {
     SnapTable.append(spark, root, df(10 until 15, "v2"))
     val name = s"snapstream_sv_${System.nanoTime()}"
     StreamRun.withStateParts(spark) {
-      val q = spark.readStream.format("snapstream")
-        .option("startingVersion", "2").load(root)
+      val q = spark.readStream
+        .option("startingVersion", "2").table(byPath(root))
         .writeStream.format("memory").queryName(name)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -110,15 +128,13 @@ class SnapStreamSpec extends AnyFunSuite {
     drain(root, sink, ckpt)
     assert(sunk(sink).map(_._1) == (0L until 15L))
     // a mapping change WITHIN one source lifetime (rename lands between
-    // offset discovery and the batch read) fails with restart advice —
+    // offset discovery and the batch plan) fails with restart advice —
     // a restarted stream re-captures the new mapping and proceeds
-    val src = new graft.sources.SnapStreamSource(
-      spark.sqlContext, root, false, None, false)
+    val src = microBatch(root)
     SnapTable.renameColumn(root, "tag", "label")
     val e = intercept[IllegalArgumentException] {
-      src.getBatch(None,
-        org.apache.spark.sql.execution.streaming.runtime.LongOffset(
-          SnapTable.latestVersion(root).toLong))
+      src.planInputPartitions(SnapOffset(0),
+        SnapOffset(SnapTable.latestVersion(root)))
     }
     assert(e.getMessage.contains("column mapping changed"))
   }
@@ -130,34 +146,29 @@ class SnapStreamSpec extends AnyFunSuite {
     (1 to 4).foreach(i =>
       SnapTable.append(spark, root,
         df(i * 4 until (i + 1) * 4, s"v${i + 1}")))            // v2..v5
-    val src = new graft.sources.SnapStreamSource(
-      spark.sqlContext, root, ignoreChanges = false,
-      startingVersion = Some(2), maxVersionsPerTrigger = Some(2))
-    import org.apache.spark.sql.execution.streaming.runtime.LongOffset
-    def offset(): Long = src.getOffset.get match {
-      case LongOffset(v) => v
-      case o => o.json().trim.toLong
-    }
-    // batch frames are streaming-flagged (analysis as batch refuses
-    // them); count through the file set off the UNanalyzed plan
-    def rows(df: org.apache.spark.sql.DataFrame): Long = {
-      val fs = df.queryExecution.logical.collect {
-        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          l.relation.asInstanceOf[
-            org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-            .location.inputFiles.toSeq
-      }.flatten
-      if (fs.isEmpty) 0L else spark.read.parquet(fs: _*).count()
+    val src = microBatch(root, startingVersion = Some(2),
+      maxVersionsPerTrigger = Some(2))
+    def end(from: SnapOffset): SnapOffset =
+      src.latestOffset(from, src.getDefaultReadLimit)
+        .asInstanceOf[SnapOffset]
+    // rows a batch plans, counted through its partitions' file set
+    def rows(from: SnapOffset, to: SnapOffset): Long = {
+      val fs = src.planInputPartitions(from, to).flatMap(
+        _.asInstanceOf[graft.sources.SnapInputPartition].slices.map(_.abs))
+        .distinct
+      if (fs.isEmpty) 0L else spark.read.parquet(fs.toIndexedSeq: _*).count()
     }
     // floor = base below startingVersion (v1); cap = 1 + 2 = 3
-    assert(offset() == 3L, s"first window must cap at v3, got ${offset()}")
-    val b1 = src.getBatch(None, LongOffset(3L))
-    assert(rows(b1) == 8) // v2 + v3 files
-    // delivered anchor advances the window
-    assert(offset() == 5L)
-    val b2 = src.getBatch(Some(LongOffset(3L)), LongOffset(5L))
-    assert(rows(b2) == 8) // v4 + v5 — nothing lost, nothing repeated
-    assert(offset() == 5L)  // caught up: offset stable, no empty batches
+    val start = src.initialOffset().asInstanceOf[SnapOffset]
+    assert(start == SnapOffset(1))
+    val e1 = end(start)
+    assert(e1 == SnapOffset(3), s"first window must cap at v3, got $e1")
+    assert(rows(start, e1) == 8) // v2 + v3 files
+    // the consumed end anchors the next window
+    val e2 = end(e1)
+    assert(e2 == SnapOffset(5))
+    assert(rows(e1, e2) == 8) // v4 + v5 — nothing lost, nothing repeated
+    assert(end(e2) == e2) // caught up: offset stable, no empty batches
   }
 
   test("admission across a log gap stays BOUNDED: an empty throttle " +
@@ -177,29 +188,13 @@ class SnapStreamSpec extends AnyFunSuite {
     // V2 native source: window (1, 1+1] holds no retained version; the
     // cap must fall to v5 (first retained above the floor), NOT v6
     // (which would silently admit the entire backlog in one batch)
-    val snap = SnapTable.load(root, SnapTable.latestVersion(root))
-    val mb = new graft.sources.SnapMicroBatchStream(spark, root,
-      SnapTable.schemaOf(snap.schemaJson), Seq.empty,
-      identity, false, None, Some(1))
-    import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    val end1 = mb.latestOffset(graft.sources.SnapOffset(1),
-      ReadLimit.allAvailable())
-    assert(end1 == graft.sources.SnapOffset(5),
+    val mb = microBatch(root, maxVersionsPerTrigger = Some(1))
+    val end1 = mb.latestOffset(SnapOffset(1), ReadLimit.allAvailable())
+    assert(end1 == SnapOffset(5),
       s"bounded catch-up: expected v5, got $end1")
     // the NEXT window then admits v6 — progress continues
-    val end2 = mb.latestOffset(graft.sources.SnapOffset(5),
-      ReadLimit.allAvailable())
-    assert(end2 == graft.sources.SnapOffset(6))
-    // V1 source: same bounded fallback through getOffset
-    val v1src = new graft.sources.SnapStreamSource(
-      spark.sqlContext, root, ignoreChanges = false,
-      startingVersion = Some(5), maxVersionsPerTrigger = Some(1))
-    import org.apache.spark.sql.execution.streaming.runtime.LongOffset
-    val o = v1src.getOffset.get match {
-      case LongOffset(v) => v
-      case other => other.json().trim.toLong
-    }
-    assert(o == 5L, s"V1 bounded catch-up: expected 5, got $o")
+    val end2 = mb.latestOffset(SnapOffset(5), ReadLimit.allAvailable())
+    assert(end2 == SnapOffset(6))
   }
 
   test("native streaming sink: toTable appends one ACID commit per " +
@@ -215,7 +210,7 @@ class SnapStreamSpec extends AnyFunSuite {
     spark.sql("CREATE TABLE snapsink.db.t (k BIGINT, v STRING)")
     val dst = s"$base/db/t"
     def drainTo(): Unit = StreamRun.withStateParts(spark) {
-      val q = spark.readStream.format("snapstream").load(src)
+      val q = spark.readStream.table(byPath(src))
         .writeStream.option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .toTable("snapsink.db.t")
@@ -263,7 +258,7 @@ class SnapStreamSpec extends AnyFunSuite {
       spark.range(0).selectExpr("id AS k", "CAST(NULL AS STRING) AS v"),
       "k", "k", 4)
     StreamRun.withStateParts(spark) {
-      val q = spark.readStream.format("snapstream").load(src)
+      val q = spark.readStream.table(byPath(src))
         .writeStream.option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .toTable("snapbkt.db.bt")
@@ -332,8 +327,7 @@ class SnapStreamSpec extends AnyFunSuite {
       q.awaitTermination()
     }
     drainTable()
-    // the V1 fallback drained ONE capped window per run; the native
-    // MicroBatchStream must drain the entire captured backlog
+    // the MicroBatchStream drains the entire captured backlog
     assert(sunk(sink).map(_._1) == (0L until 20L),
       "one AvailableNow run must drain the whole backlog")
     // ...and in RATE-LIMITED batches: one committed offset per consumed
@@ -436,7 +430,7 @@ class SnapStreamSpec extends AnyFunSuite {
   }
 
   test("startingTimestamp resolves to the earliest version committed " +
-      "at-or-after it (both source flavors)") {
+      "at-or-after it") {
     val root = Tmp.dir("snapstream_ts")
     SnapTable.create(spark, root, df(0 until 5, "v1"), "k")
     Thread.sleep(10) // distinct commit timestamps
@@ -444,8 +438,8 @@ class SnapStreamSpec extends AnyFunSuite {
     val cut = SnapTable.load(root, 2).ts
     val name = s"snapstream_ts_${System.nanoTime()}"
     StreamRun.withStateParts(spark) {
-      val q = spark.readStream.format("snapstream")
-        .option("startingTimestamp", cut.toString).load(root)
+      val q = spark.readStream
+        .option("startingTimestamp", cut.toString).table(byPath(root))
         .writeStream.format("memory").queryName(name)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -467,7 +461,7 @@ class SnapStreamSpec extends AnyFunSuite {
     spark.sql("CREATE TABLE snapcmpl.db.t (v STRING, n BIGINT)")
     val dst = s"$base/db/t"
     def refresh(): Unit = StreamRun.withStateParts(spark) {
-      val q = spark.readStream.format("snapstream").load(src)
+      val q = spark.readStream.table(byPath(src))
         .groupBy($"v").agg(count(lit(1)).as("n"))
         .writeStream.option("checkpointLocation", ckpt)
         .outputMode("complete")
@@ -504,14 +498,13 @@ class SnapStreamSpec extends AnyFunSuite {
     assert(SnapTable.latestVersion(dst) == vBefore)
   }
 
-  test("readChangeFeed maintains a view through deletes: signed deltas " +
-      "net to the live table") {
+  test("the .changes feed maintains a view through deletes: signed " +
+      "deltas net to the live table") {
     val root = Tmp.dir("snapstream_cdc")
     val sink = Tmp.dir("snapstream_cdc_sink")
     val ckpt = Tmp.dir("snapstream_cdc_ckpt")
     def drainCdc(): Unit = StreamRun.withStateParts(spark) {
-      val q = spark.readStream.format("snapstream")
-        .option("readChangeFeed", "true").load(root)
+      val q = spark.readStream.table(s"${byPath(root)}.changes")
         .writeStream.format("parquet")
         .option("path", sink).option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
@@ -523,7 +516,8 @@ class SnapStreamSpec extends AnyFunSuite {
     drainCdc() // incremental +1s
     SnapTable.deleteWhere(spark, root, col("k") < 5)
     drainCdc() // removed file -1s, rewritten survivors +1
-    val feed = spark.read.parquet(sink).as[(Long, String, Int)].collect()
+    val feed = spark.read.parquet(sink).select("k", "v", "_sign")
+      .as[(Long, String, Int)].collect()
     assert(feed.exists(_._3 == -1), "delete emitted no negative deltas")
     // the NET of the signed feed is exactly the live table
     val net = feed.groupBy(r => (r._1, r._2))
