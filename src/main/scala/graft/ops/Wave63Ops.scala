@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, QueryModule, T}
+import graft.{Par, Q, QueryModule, T}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -441,25 +441,21 @@ object Wave63Ops extends QueryModule {
         // cadences are graded by their own ops). The two pipelines
         // write DISJOINT txroots and share nothing — overlap their
         // ingest jobs (guide §2.6) instead of serializing two
-        // commit-latency chains (r15).
+        // commit-latency chains (r15): the lex ingest is a Par fork.
         val btx = graft.Tmp.dir("graft_his_bm25")
         val vtx = graft.Tmp.dir("graft_his_vec")
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-        val fLex = pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = {
+        val cents = Par.scope(s) { sc =>
+          val lexIngest = sc.fork {
             Bm25Index.setup(s, btx)
             Bm25Index.ingest(s, btx, T(s, dir, "documents")
               .select(col("doc_id"), col("text")), 0L)
           }
-        })
-        val (route, gridded, cents) = Wave62Ops.semdedupGeometry(s, dir)
-        Wave62Ops.VecStreamIndex.setup(s, vtx, gridded, route)
-        Wave62Ops.VecStreamIndex.ingest(s, vtx, gridded, 0L, route)
-        try fLex.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
-        } finally pool.shutdown()
+          val (route, gridded, cents) = Wave62Ops.semdedupGeometry(s, dir)
+          Wave62Ops.VecStreamIndex.setup(s, vtx, gridded, route)
+          Wave62Ops.VecStreamIndex.ingest(s, vtx, gridded, 0L, route)
+          lexIngest.join()
+          cents
+        }
         // LEX half: top-5 per query from the pinned inverted index;
         // ANN half: the pinned cell index probed at nprobe=2; RRF
         // fusion — all three the factored one-definition bodies

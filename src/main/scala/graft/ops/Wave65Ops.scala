@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, QueryModule, T, Tmp}
+import graft.{Par, Q, QueryModule, T, Tmp}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -256,72 +256,46 @@ object Wave65Ops extends QueryModule {
       // batch is rebound into it.
       val iso = org.apache.spark.sql.graftx.Bridge.isolatedSession(s)
       val partsKey = "spark.sql.shuffle.partitions"
-      // dev-only section timer (GRAFT_PROF_INGEST=1): wall per phase
-      val profT0 = new java.util.concurrent.atomic.AtomicLong(
-        System.nanoTime())
-      def mark(tag: String): Unit =
-        if (sys.env.contains("GRAFT_PROF_INGEST")) {
-          val now = System.nanoTime()
-          println(f"INGEST b$batchId $tag%-12s " +
-            f"${(now - profT0.get()) / 1e9}%6.2f s")
-          profT0.set(now)
-        }
       // (r15, VERDICT-r14 #1) the four state collapses and the batch
       // projection are INDEPENDENT eager checkpoints: overlap their
-      // per-job latency from a bounded pool (guide §2.6) instead of
+      // per-job latency as Par forks (guide §2.6) instead of
       // serializing five driver round-trips per wave. The row counts
       // the width decision needs ride as observe() metrics on the
       // materializations already paid — the two separate count() jobs
       // are gone (local-mode-exact, same caveat as ccMinLabel's
       // convergence metrics).
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-      def fut(f: => DataFrame)
-          : java.util.concurrent.Future[DataFrame] =
-        pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = f
-        })
-      def get[A](f: java.util.concurrent.Future[A]): A =
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
-        }
-      try {
+      Par.scope(s) { sc =>
         val obsLed = org.apache.spark.sql.Observation()
         val obsB = org.apache.spark.sql.Observation()
-        val fLedger = fut(p(latestBy(
+        val fLedger = sc.fork(p(latestBy(
             SnapTxn.read(iso, txroot, "ledger"), "doc_id")
           .observe(obsLed, count(lit(1)).as("n"))))
-        val fFps = fut(p(latestBy(SnapTxn.read(iso, txroot, "fps"),
+        val fFps = sc.fork(p(latestBy(SnapTxn.read(iso, txroot, "fps"),
             "fp")
           .select("fp", "fp_id", "keeper", "lang", "source")))
-        val fL4 = fut(p(latestBy(SnapTxn.read(iso, txroot, "labels4"),
+        val fL4 = sc.fork(p(latestBy(SnapTxn.read(iso, txroot, "labels4"),
           "id").select("id", "comp")))
-        val fL5 = fut(p(latestBy(SnapTxn.read(iso, txroot, "labels5"),
+        val fL5 = sc.fork(p(latestBy(SnapTxn.read(iso, txroot, "labels5"),
           "id").select("id", "comp")))
-        val fB0 = fut(p(org.apache.spark.sql.graftx.Bridge
+        val fB0 = sc.fork(p(org.apache.spark.sql.graftx.Bridge
           .inSession(iso, batch)
           .select(col("doc_id"), col("lang"), col("source"),
             col("text"), col("n_chars"), col("g"))
           .withColumn("toks", split(col("text"), " "))
           .withColumn("n_toks", size(col("toks")).cast("long"))
           .observe(obsB, count(lit(1)).as("n"))))
-        val prevLedger = get(fLedger)
-        val prevFps = get(fFps)
-        val prevL4 = get(fL4)
-        val prevL5 = get(fL5)
-        val b0 = get(fB0)
-        mark("collapses")
+        val prevLedger = fLedger.join()
+        val prevFps = fFps.join()
+        val prevL4 = fL4.join()
+        val prevL5 = fL5.join()
+        val b0 = fB0.join()
         // a doc_id lands exactly once — the only arrival guard. The
         // check is read-only and the wave's single side effect is the
         // SnapTxn.commit at the end, so it runs CONCURRENTLY with the
         // wave (both join sides are cached checkpoint blocks) and is
         // required to have landed clean just before the commit.
-        val fDup = pool.submit(new java.util.concurrent.Callable[Long] {
-          override def call(): Long =
-            b0.join(prevLedger, Seq("doc_id"), "left_semi")
-              .limit(1).count()
-        })
+        val fDup = sc.fork(
+          b0.join(prevLedger, Seq("doc_id"), "left_semi").limit(1).count())
         // shuffle width follows the DATA (the ccMinLabel/Wave55
         // discipline): an ingest wave runs ~30 small exchanges over
         // state + batch frames; core-count width just multiplies
@@ -334,14 +308,12 @@ object Wave65Ops extends QueryModule {
           o.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
         iso.conf.set(partsKey, math.max(4L,
           (obsN(obsLed) + obsN(obsB)) / 250000L).toString)
-        mark("width+dup")
         // stages 1-2: row-local gates
         val s1B = b0.filter(TextOps.langIdExpr(col("text")) ===
           col("lang"))
         val s2B = p(s1B.filter(Wave64Ops.qualityScore >= 0.5)
           .withColumn("fp", md5(concat_ws(" ",
             array_sort(array_distinct(col("toks")))))))
-        mark("gates")
         // the published stage-4 min is over CURRENT keepers — a
         // rollup of the group table, never graph surgery
         def dminOf(groups: DataFrame, labels: DataFrame): DataFrame =
@@ -353,26 +325,22 @@ object Wave65Ops extends QueryModule {
         // accumulated vector index, the previous pin's rep set and the
         // previous stage-5 membership depend only on the state
         // collapses and the gated batch — never on the stage-3/4
-        // outcome — so their eager checkpoints run from the pool while
+        // outcome — so their eager checkpoints run in a Par fork while
         // the main thread works the prefix probe and cc4.
-        val fS5 = pool.submit(new java.util.concurrent.Callable[
-            (DataFrame, DataFrame, DataFrame, DataFrame)] {
-          override def call()
-              : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-            val repsPrev = p(dminOf(prevFps, prevL4)
-              .select(col("dmin").as("id")))
-            val vecDelta = p(route(
-              s2B.filter(col("g").isNotNull)
-                .select(col("doc_id").as("vec_id"), col("g"))))
-            val vecAll = p(SnapTxn.read(iso, txroot, "vecidx")
-              .unionByName(vecDelta))
-            val prevM5 = p(prevL5
-              .join(repsPrev, Seq("id"), "left_semi")
-              .join(vecAll.select(col("vec_id").as("id")), Seq("id"),
-                "left_semi"))
-            (repsPrev, vecDelta, vecAll, prevM5)
-          }
-        })
+        val fS5 = sc.fork {
+          val repsPrev = p(dminOf(prevFps, prevL4)
+            .select(col("dmin").as("id")))
+          val vecDelta = p(route(
+            s2B.filter(col("g").isNotNull)
+              .select(col("doc_id").as("vec_id"), col("g"))))
+          val vecAll = p(SnapTxn.read(iso, txroot, "vecidx")
+            .unionByName(vecDelta))
+          val prevM5 = p(prevL5
+            .join(repsPrev, Seq("id"), "left_semi")
+            .join(vecAll.select(col("vec_id").as("id")), Seq("id"),
+              "left_semi"))
+          (repsPrev, vecDelta, vecAll, prevM5)
+        }
         // stage 3: GROUP-level keeper maintenance — order-free. The
         // batch min per fp either founds a new group (fp_id = that
         // doc, stable forever) or DEMOTES the keeper when smaller.
@@ -406,7 +374,6 @@ object Wave65Ops extends QueryModule {
         val fpsNow = p(prevFps
           .join(fpsDelta.select("fp"), Seq("fp"), "left_anti")
           .unionByName(fpsDelta.drop("wave")))
-        mark("stage3")
         // stage 4, fp space. The stored graph is CONTENT edges
         // (exact Jaccard >= 0.8, NO block condition) — those are
         // stable and append-only (token sets never change, groups
@@ -420,10 +387,8 @@ object Wave65Ops extends QueryModule {
             Seq("doc_id"), "left_semi")
           .select(col("doc_id"),
             array_sort(array_distinct(col("toks"))).as("ts")))
-        mark("s4:t4B")
         val prefB = p(frozenPrefixRows(t4B,
           SnapTxn.read(iso, txroot, "tokord")))
-        mark("s4:prefB")
         val allPref = p(SnapTxn.read(iso, txroot, "pref")
           .unionByName(prefB))
         // hot collision groups SPLIT instead of failing (§18.1 #3): a
@@ -436,23 +401,11 @@ object Wave65Ops extends QueryModule {
         // Arrival order is arbitrary, so a new group's id can sit on
         // either side of an indexed one — the rule canonicalizes with
         // least/greatest instead of assuming newer = larger.
-        mark("s4:allPref")
         val cand = Wave66Ops.gridSaltedProbeCandidates(prefB, allPref,
           Nil, Wave64Ops.PrefixGroupCap)
-        val candP = if (!sys.env.contains("GRAFT_PROF_INGEST")) cand
-          else {
-            val c = p(cand)
-            println(s"INGEST b$batchId s4:cand rows=${c.count()}")
-            mark("s4:cand")
-            c
-          }
-        val newContent = p(Wave64Ops.jaccardVerify(candP,
+        val newContent = p(Wave64Ops.jaccardVerify(cand,
           SnapTxn.read(iso, txroot, "ts4")
             .unionByName(t4B.select("doc_id", "ts"))))
-        if (sys.env.contains("GRAFT_PROF_INGEST"))
-          println(s"INGEST b$batchId s4:verified rows=" +
-            newContent.count())
-        mark("s4:verify")
         val edgesAll = SnapTxn.read(iso, txroot, "edges4")
           .unionByName(newContent)
         // current-block filter: an edge is LIVE iff both groups'
@@ -467,7 +420,6 @@ object Wave65Ops extends QueryModule {
             col("lang").as("lb"), col("source").as("sb")), Seq("b"))
           .filter(col("la") === col("lb") && col("sa") === col("sb"))
           .select("a", "b"))
-        mark("s4:liveEdges")
         // delta-CC with deletions (the stage-5 machinery at stage 4):
         // perturbed nodes = new groups + groups whose block MOVED;
         // affected comps = their prev comps plus the prev comps of
@@ -501,7 +453,6 @@ object Wave65Ops extends QueryModule {
             "left_semi")
           .join(subG4.withColumnRenamed("id", "b"), Seq("b"),
             "left_semi")
-        mark("stage4prep")
         val newSubL4 = Wave64Ops.ccMinLabel(iso, subG4, subE4,
           s"pipe_curation_live:near:b$batchId")
         val newL4 = p(prevL4
@@ -512,12 +463,11 @@ object Wave65Ops extends QueryModule {
             "left")
           .filter(col("pcomp").isNull || col("pcomp") =!= col("comp"))
           .select(w, col("id"), col("comp")))
-        mark("cc4")
         val dminNow = p(dminOf(fpsNow, newL4))
         // (r14) narrow select over the checkpointed dminNow
         val repsNow = dminNow.select(col("dmin").as("id"))
         // join the overlapped stage-5 prep (see fS5 above)
-        val (repsPrev, vecDelta, vecAll, prevM5) = get(fS5)
+        val (repsPrev, vecDelta, vecAll, prevM5) = fS5.join()
         val removedReps = repsPrev.join(repsNow, Seq("id"),
           "left_anti")
         // NOT necessarily ⊆ this batch: a block-moved group can SPLIT
@@ -526,7 +476,6 @@ object Wave65Ops extends QueryModule {
         // gate survivor's routed vector (O(batch) rows per wave), not
         // just ever-reps': a regained rep's vector must be findable.
         val addedReps = repsNow.join(repsPrev, Seq("id"), "left_anti")
-        mark("dmin")
         // stage 5: delta-CC with deletions over affected components
         // (vecDelta / vecAll / prevM5 were checkpointed by fS5 while
         // stages 3-4 ran)
@@ -558,12 +507,10 @@ object Wave65Ops extends QueryModule {
         val subRouted = p(vecAll.join(
           subNodes.withColumnRenamed("id", "vec_id"), Seq("vec_id"),
           "left_semi"))
-        mark("stage5prep")
         // ccMinLabel already returns a checkpoint-backed frame
         val newSubL5 = Wave64Ops.ccMinLabel(iso, subNodes,
           Wave64Ops.semPairs(subRouted),
           s"pipe_curation_live:sem:b$batchId")
-        mark("cc5")
         // NOT checkpointed (r15): consumed exactly once (the commit's
         // write job), and its plan is one shallow join over two
         // checkpointed frames — the eager materialization was a pure
@@ -577,7 +524,6 @@ object Wave65Ops extends QueryModule {
           .join(subNodes, Seq("id"), "left_anti")
           .join(removed5, Seq("id"), "left_anti")
           .union(newSubL5)
-        mark("l5delta")
         // ---- decisions. One function of (doc_id, fp): keeper test →
         // rep test → stage-5 membership/label → survived. Matches the
         // batch funnel's semantics exactly.
@@ -660,17 +606,15 @@ object Wave65Ops extends QueryModule {
             .select(w, col("doc_id"), col("dropped_at"),
               col("reason"), col("kept_by"), col("n_toks"),
               col("fp")))
-        mark("decide")
         // the ledger-delta row count rides on the checkpoint
         // materialization (one job, not two)
         val obsN5 = org.apache.spark.sql.Observation()
         val ledgerP = p(ledgerDelta
           .observe(obsN5, count(lit(1)).as("n")))
         val n = obsN5.get.apply("n").asInstanceOf[Long]
-        mark("ledgercount")
         // the deferred arrival guard must land clean BEFORE the wave's
         // only side effect
-        require(get(fDup) == 0L,
+        require(fDup.join() == 0L,
           s"pipe_curation_live: batch $batchId re-lands an absorbed " +
             "doc_id — ids are assigned once at ingest")
         SnapTxn.commit(iso, txroot, Seq(
@@ -683,9 +627,8 @@ object Wave65Ops extends QueryModule {
           "labels5" -> l5Delta,
           "vecidx" -> vecDelta.toDF()),
           note = SnapTxn.batchNote(batchId))
-        mark("commit")
         n
-      } finally pool.shutdown()
+      }
     }
 
     /** The decision set as of the current pin: the changelog collapsed
@@ -853,23 +796,7 @@ object Wave65Ops extends QueryModule {
         // checkpoints (each feeds both waves' edge filters; the former
         // lazy persists were first populated inside ccMinLabel's w0
         // edge job, serially and with two branches racing the caches)
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-        val fLex = pool.submit(
-          new java.util.concurrent.Callable[DataFrame] {
-            override def call(): DataFrame =
-              org.apache.spark.sql.graftx.Bridge
-                .localCheckpointHonestStats(Wave64Ops.lexPairs(s, dir))
-          })
-        val (route, gridded, _) = Wave62Ops.semdedupGeometry(s, dir)
-        val f = route(gridded).persist()
-        val sem = org.apache.spark.sql.graftx.Bridge
-          .localCheckpointHonestStats(Wave64Ops.semPairs(f))
-        val lex =
-          try fLex.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause
-          } finally pool.shutdown()
+        val (lex, sem) = Wave64Ops.crossmodalPairs(s, dir)
         val even = (c: String) => col(c) % 2 === 0
         val docs = T(s, dir, "documents")
           .select(col("doc_id").as("id"))
@@ -911,9 +838,6 @@ object Wave65Ops extends QueryModule {
           .select(lit(1L).as("wave"), col("id"), col("comp"))
         SnapTxn.commit(s, txroot, Seq("labels" -> changed),
           note = SnapTxn.batchNote(1L))
-        // lex/sem are checkpoint-backed now (blocks are ContextCleaner-
-        // reclaimed once unreachable); only f keeps an explicit persist
-        f.unpersist(blocking = false)
         val p2 = serveAt(SnapTxn.latestTx(txroot), "p2")
         p1.unionByName(p2).orderBy("pin", "doc_id")
       },

@@ -84,40 +84,21 @@ object SnapTxn {
     // PREPARE: per-table snapshots built from the PINNED parents (never
     // from the per-table head — that may be another tx's orphan).
     // Tables are independent (disjoint roots, stateless write path), so
-    // the prepares run CONCURRENTLY from a bounded pool — the write
-    // jobs overlap instead of serializing their per-job latency (an
-    // 8-table live-funnel commit is 8 tiny writes whose wall was pure
-    // job-scheduling serialization). Failure semantics are unchanged:
-    // any failure aborts the commit before publish, and half-written
-    // commit dirs are unpinned orphans exactly as in the sequential
-    // form.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(writes.size, 8))
-    val prepared =
-      try {
-        val futs = writes.map { case (t, df) =>
-          t -> pool.submit(new java.util.concurrent.Callable[Int] {
-            override def call(): Int =
-              SnapTable.prepareAppend(s, s"$txroot/$t", df, base.pins(t))
-          })
-        }
-        futs.map { case (t, f) =>
-          t -> (try f.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              // r15 (ADVICE-r14): a failed prepare ABORTS the commit —
-              // cancel queued sibling prepares and wait out in-flight
-              // ones before propagating, so an aborted commit implies
-              // no prepare is still running (vacuumOrphans/rewritePinned
-              // require exactly that). Finished siblings' snapshots are
-              // unpinned orphans, as before.
-              pool.shutdownNow()
-              pool.awaitTermination(10,
-                java.util.concurrent.TimeUnit.MINUTES)
-              throw e.getCause
-          })
-        }.toMap
-      } finally pool.shutdown()
+    // the prepares run CONCURRENTLY as Par forks — the write jobs
+    // overlap instead of serializing their per-job latency (an 8-table
+    // live-funnel commit is 8 tiny writes whose wall was pure
+    // job-scheduling serialization). A failed prepare ABORTS the commit
+    // before publish: the Par scope cancels the sibling prepares' Spark
+    // jobs and waits them out before the original exception propagates,
+    // so an aborted commit implies no prepare, and no job of one, is
+    // still running (vacuumOrphans/rewritePinned require exactly that).
+    // Finished siblings' snapshots are unpinned orphans.
+    val prepared = graft.Par.scope(s) { sc =>
+      writes.map { case (t, df) =>
+        t -> sc.fork(
+          SnapTable.prepareAppend(s, s"$txroot/$t", df, base.pins(t)))
+      }.map { case (t, f) => t -> f.join() }.toMap
+    }
     publish(txroot, base, prepared, note)
   }
 

@@ -1,6 +1,8 @@
 package graft
 
 import graft.sources.{SnapTable, SnapTxn}
+import org.apache.spark.GraftTestHooks
+import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Multi-table transaction contracts the logical oracle can't see:
@@ -151,5 +153,48 @@ class SnapTxnSpec extends AnyFunSuite {
     assert(h.length == 4) // 2 txs × 2 tables
     assert(h.contains((1L, "a", 1L)) && h.contains((1L, "b", 1L)))
     assert(h.count(_._1 == 2L) == 2)
+  }
+
+  test("a failed prepare aborts the commit: the original exception, an " +
+      "unchanged head, and no sibling prepare job left running") {
+    val txroot = setup()
+    val before = SnapTxn.head(txroot)
+    // both frames are parallelized RDDs, so each UDF runs in a task
+    // (never folded on the driver) and a cancelled task ends within one
+    // row. The failing prepare fails about 1 s in, while the slow one
+    // (about 3 s per task, on 3 of the 4 local cores) is running.
+    val boom = udf { (k: Long) =>
+      Thread.sleep(1000)
+      if (k >= 0) throw new IllegalStateException("prepare boom")
+      k
+    }
+    val slow = udf { (k: Long) => Thread.sleep(100); k }
+    def rows(ks: Range, tag: String, tasks: Int) = spark.sparkContext
+      .parallelize(ks.map(k => (k.toLong, tag)), tasks).toDF("k", "v")
+    val failing = rows(20 until 30, "x", 1).withColumn("k", boom(col("k")))
+    val slowRows = rows(100 until 190, "slow", 3)
+      .withColumn("k", slow(col("k")))
+    val group = "snaptxn-abort"
+    spark.sparkContext.setJobGroup(group, group)
+    val e =
+      try intercept[Exception] {
+        SnapTxn.commit(spark, txroot, Seq("a" -> failing, "b" -> slowRows))
+      } finally spark.sparkContext.clearJobGroup()
+    val running = GraftTestHooks.activeJobs(spark.sparkContext, group)
+    def chain(t: Throwable): List[Throwable] =
+      if (t == null) Nil else t :: chain(t.getCause)
+    assert(chain(e).exists(c => Option(c.getMessage)
+      .exists(_.contains("prepare boom"))), s"not the original: $e")
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException])
+    assert(SnapTxn.head(txroot) == before)
+    assert(running.isEmpty, s"prepare jobs still running: $running")
+    // any prepared orphan is reclaimed: every surviving version is pinned
+    SnapTxn.vacuumOrphans(txroot)
+    Seq("a", "b").foreach { t =>
+      val pinned = SnapTxn.txVersions(txroot)
+        .map(v => SnapTxn.load(txroot, v).pins(t)).toSet
+      assert(SnapTable.versions(s"$txroot/$t").toSet == pinned)
+      assert(ks(txroot, t) == (0L until 10L).toSet)
+    }
   }
 }
