@@ -1,6 +1,9 @@
 package graft
 
+import graft.sources.ParquetMeta
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.types.LongType
 
 /** One declared operator: a Spark pipeline plus (when SQL-expressible) the
   * equivalent DuckDB oracle statement the driver replays on the same parquet
@@ -20,38 +23,57 @@ trait QueryModule {
 }
 
 /** Table loader. One parquet file per table per scale factor; schema comes
-  * from the footer (schema-on-read). At cluster scale these would be
-  * partitioned directories — the API is unchanged.
+  * from the footer (schema-on-read). For a regular file the footer is read
+  * on the driver ([[graft.sources.ParquetMeta]]) and the frame is read
+  * with that schema, so building it schedules zero Spark jobs; without
+  * one, Spark would run a schema-inference job per call. A directory (the
+  * cluster-scale layout, e.g. `ScaleFixture`'s) keeps Spark's inference,
+  * with partition discovery and summary files; so does a missing path,
+  * which then fails with Spark's own `AnalysisException`.
   *
   * `events.ts` has shipped as TIMESTAMP(NANOS) in some testdata
   * generations and TIMESTAMP(MICROS) in others, so the loader adapts to
   * the footer: NANOS is unreadable as a timestamp in Spark 4, so it is
-  * read as raw nanos (`nanosAsLong`) and truncated to µs — exactly
+  * read as raw nanos (`nanosAsLong`, set on the session only for a NANOS
+  * footer, or before inferring a directory) and truncated to µs — exactly
   * DuckDB's `CAST(ts AS TIMESTAMP)` semantics (verified: DuckDB
   * truncates, and `ts div 1000` on positive longs truncates
   * identically); MICROS reads natively and only needs the NTZ cast.
   * Either way downstream sees `ts TIMESTAMP_NTZ` at µs precision.
   */
 object T {
-  def apply(s: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = s.read.parquet(s"$dir/events.parquet")
-      df.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType => // TIMESTAMP(NANOS)
-          df.withColumn("ts", org.apache.spark.sql.functions
-            .expr("CAST(timestamp_micros(ts div 1000) AS TIMESTAMP_NTZ)"))
-        case _ => // native timestamp footer (µs)
-          df.withColumn("ts", org.apache.spark.sql.functions.col("ts")
-            .cast("timestamp_ntz"))
-      }
-    } else s.read.parquet(s"$dir/$name.parquet")
+  def apply(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val df = ParquetMeta.fileFooter(s, path) match {
+      case Some(footer) =>
+        // before the conversion: the converter rejects NANOS without it
+        if (name == "events" && ParquetMeta.timestampNanos(footer, "ts"))
+          readNanosAsLong(s)
+        s.read.schema(ParquetMeta.schema(s, path, footer)).parquet(path)
+      case None =>
+        if (name == "events") readNanosAsLong(s)
+        s.read.parquet(path)
+    }
+    if (name != "events") df
+    else df.schema("ts").dataType match {
+      case LongType => // TIMESTAMP(NANOS)
+        df.withColumn("ts",
+          expr("CAST(timestamp_micros(ts div 1000) AS TIMESTAMP_NTZ)"))
+      case _ => // native timestamp footer (µs)
+        df.withColumn("ts", col("ts").cast("timestamp_ntz"))
+    }
+  }
+
+  /** Lets Spark read TIMESTAMP(NANOS) parquet columns, as raw longs. Both
+    * the schema conversion and the scan itself need it on the session. */
+  private[graft] def readNanosAsLong(s: SparkSession): Unit =
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** Exact row count of a fixture table from parquet footers only —
     * zero Spark jobs (see [[graft.sources.ParquetMeta]]). The sizing
     * input for the IVF/ANN cell splits. */
   def rows(s: SparkSession, dir: String, name: String): Long =
-    graft.sources.ParquetMeta.rowCount(s, s"$dir/$name.parquet")
+    ParquetMeta.rowCount(s, s"$dir/$name.parquet")
 }
 
 /** Per-JVM scratch space for the side-effecting source/sink operators.

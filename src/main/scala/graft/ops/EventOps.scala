@@ -28,12 +28,14 @@ object EventOps extends QueryModule {
   def liveEvents(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.types._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // the fixture's ts footer type varies by testdata generation (NANOS
-    // read as raw long vs native MICROS) — probe it with the batch
-    // loader once and mirror its shape in the streaming schema
-    val nanos = s.read.parquet(s"$dir/events.parquet")
-      .schema("ts").dataType == LongType
+    // read as raw long vs native MICROS) — take it from the footer, as
+    // the batch loader does, and mirror its shape in the streaming schema
+    val path = s"$dir/events.parquet"
+    val footer = graft.sources.ParquetMeta.fileFooter(s, path).getOrElse(
+      throw new java.io.FileNotFoundException(s"$path: not a parquet file"))
+    val nanos = graft.sources.ParquetMeta.timestampNanos(footer, "ts")
+    if (nanos) T.readNanosAsLong(s)
     val schema = StructType(Seq(
       StructField("event_id", LongType),
       StructField("ts", if (nanos) LongType else TimestampNTZType),

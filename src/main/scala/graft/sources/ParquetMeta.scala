@@ -1,13 +1,20 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 import scala.jdk.CollectionConverters._
 
-/** Footer-only parquet statistics.
+/** Footer-only parquet statistics and schemas.
   *
   * `rowCount` answers "how many rows does this table hold" from the
   * parquet footers alone — ZERO Spark jobs, no task scheduling, no data
@@ -22,8 +29,18 @@ import scala.jdk.CollectionConverters._
   * rows spanning [0, n−1] — uniqueness itself is the table's key
   * contract, not provable from min/max/count), which lets the
   * incremental ops derive residue-class batch sizes exactly without a
-  * scan (VERDICT-r11 #7). ParquetMetaSpec pins all properties: counts
-  * and stats equal their scan-based twins and schedule no Spark job.
+  * scan (VERDICT-r11 #7). `schema` answers a single file's Spark schema
+  * the way Spark's own inference derives it, but on the driver: the
+  * table loader [[graft.T]] reads with it instead of paying a schema
+  * inference job per table. ParquetMetaSpec pins all properties: counts,
+  * stats and schemas equal their scan- or inference-based twins and
+  * schedule no Spark job.
+  *
+  * Every footer open in main code goes through [[open]], with read
+  * options built from the caller's Hadoop conf: `ParquetFileReader.open`
+  * without options builds a fresh default `Configuration` per call,
+  * which re-parses the Hadoop default resources on every footer read and
+  * costs more than the read itself.
   *
   * Scope: exact for plain parquet files/directories (the fixture layout
   * and any parquet table without deletion vectors). Snapshot tables
@@ -31,6 +48,51 @@ import scala.jdk.CollectionConverters._
   * manifests carry exact per-file row counts).
   */
 object ParquetMeta {
+
+  /** Opens one parquet file for footer reads, with read options from
+    * `conf` (see the object doc). Also runs on executors, so it takes
+    * a conf rather than a session. The caller closes the reader. */
+  def open(conf: Configuration, file: Path): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file).build())
+
+  /** The footer of `path` when it is a regular file; `None` for a
+    * directory or a missing path, which keep Spark's own inference. */
+  def fileFooter(s: SparkSession, path: String): Option[ParquetMetadata] = {
+    val conf = s.sessionState.newHadoopConf()
+    val file = new Path(path)
+    val fs = file.getFileSystem(conf)
+    val isFile =
+      try fs.getFileStatus(file).isFile
+      catch { case _: java.io.FileNotFoundException => false }
+    if (!isFile) None
+    else {
+      val r = open(conf, file)
+      try Some(r.getFooter) finally r.close()
+    }
+  }
+
+  /** The Spark schema of one file's footer, converted by Spark's own
+    * per-file schema-inference function under `s`'s SQL conf. It keeps
+    * the footer's non-null fields; a file source read with it applies
+    * `asNullable`, so the frame's schema equals the inferred one. */
+  def schema(s: SparkSession, path: String, footer: ParquetMetadata)
+      : StructType =
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(new Path(path), footer),
+      new ParquetToSparkSchemaConverter(s.sessionState.conf))
+
+  /** Whether top-level `column` is a TIMESTAMP(NANOS) in the footer. */
+  def timestampNanos(footer: ParquetMetadata, column: String): Boolean = {
+    val schema = footer.getFileMetaData.getSchema
+    schema.containsField(column) &&
+    (schema.getType(schema.getFieldIndex(column)).getLogicalTypeAnnotation
+      match {
+        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+          t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+        case _ => false
+      })
+  }
 
   /** Visible data files under `path` (recursive over partitioned
     * layouts); a file or an empty seq for a bare file path. Hidden /
@@ -40,7 +102,7 @@ object ParquetMeta {
     * count. A visible non-.parquet data file fails fast — silently
     * skipping it would under-report with no error (ADVICE-r11). */
   private def dataFiles(s: SparkSession, path: String)
-      : (org.apache.hadoop.conf.Configuration, Seq[Path]) = {
+      : (Configuration, Seq[Path]) = {
     val conf = s.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
@@ -73,7 +135,7 @@ object ParquetMeta {
     val (conf, files) = dataFiles(s, path)
     var total = 0L
     files.foreach { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val r = open(conf, f)
       try total += r.getRecordCount
       finally r.close()
     }
@@ -91,7 +153,7 @@ object ParquetMeta {
     var mx = Long.MinValue
     var blocks = 0
     files.foreach { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val r = open(conf, f)
       try r.getFooter.getBlocks.asScala.foreach { b =>
         if (b.getRowCount > 0) {
           blocks += 1

@@ -2827,7 +2827,9 @@ object SnapTable {
     * entries. Stats come from the parquet FOOTERS the write already
     * produced (row counts + column-chunk min/max), not from re-scanning
     * the data — commit cost is metadata-sized. Footers are read on the
-    * driver here; on a real cluster this loop is a `spark.parallelize`
+    * driver here, one [[ParquetMeta.open]] per written file under the
+    * session's Hadoop conf (so no per-file reload of Hadoop's default
+    * resources); on a real cluster this loop is a `spark.parallelize`
     * over file names (footer reads are independent), same as Iceberg's
     * manifest workers.
     */
@@ -2889,7 +2891,9 @@ object SnapTable {
 
   /** Manifest entry for one just-written parquet file, from its FOOTER
     * (row count + every INT64 column's min/max merged across row groups)
-    * — no data re-scan; `None` for an empty part file.
+    * — no data re-scan; `None` for an empty part file. The footer is
+    * opened through [[ParquetMeta.open]] with the SparkContext's Hadoop
+    * conf.
     */
   private[sources] def footerEntry(s: SparkSession, root: String,
       p: Path): Option[FileEntry] =
@@ -2901,9 +2905,7 @@ object SnapTable {
   private[sources] def footerEntryConf(
       conf: org.apache.hadoop.conf.Configuration, root: String,
       p: Path): Option[FileEntry] = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.toUri), conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val reader = ParquetMeta.open(conf, new org.apache.hadoop.fs.Path(p.toUri))
     try {
       val blocks = reader.getFooter.getBlocks.asScala
       if (blocks.isEmpty) None // empty part file: no entry, no stats

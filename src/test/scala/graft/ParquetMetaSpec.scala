@@ -1,13 +1,24 @@
 package graft
 
+import graft.ops.EventOps
 import graft.sources.ParquetMeta
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.TimestampNTZType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the two properties the ANN sizing path relies on
   * (VERDICT-r10 #3): ParquetMeta.rowCount equals the scan-based count,
   * and computing it schedules ZERO Spark jobs — the op's first job is
-  * the pipeline itself, never a sizing pass.
+  * the pipeline itself, never a sizing pass. The same two properties
+  * hold for the table loader `T`: its footer-derived schema equals
+  * Spark's inferred one, and building a fixture frame runs no job.
   */
 class ParquetMetaSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -71,28 +82,9 @@ class ParquetMetaSpec extends AnyFunSuite {
   }
 
   test("longStats schedules zero Spark jobs") {
-    val group = "pqmeta-stats-zero-jobs"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-          group == j.properties.getProperty("spark.jobGroup.id"))
-          jobs.add(j.jobId)
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setJobGroup(group, "zero-jobs pin")
-    try {
+    assertZeroJobs("pqmeta-stats-zero-jobs") {
       ParquetMeta.longStats(spark,
         s"${TestSpark.Sf}/embeddings.parquet", "vec_id")
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (jobs.isEmpty && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(jobs.size === 1,
-        s"expected only the sentinel job, saw ${jobs.size}")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(l)
     }
   }
 
@@ -110,12 +102,116 @@ class ParquetMetaSpec extends AnyFunSuite {
   }
 
   test("rowCount schedules zero Spark jobs") {
-    val group = "pqmeta-zero-jobs"
+    assertZeroJobs("pqmeta-zero-jobs") {
+      ParquetMeta.rowCount(spark, s"${TestSpark.Sf}/embeddings.parquet")
+    }
+  }
+
+  private val fixtures = new java.io.File(TestSpark.Sf).list().toSeq
+    .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).sorted
+
+  test("T builds every fixture frame with zero Spark jobs") {
+    assert(fixtures.contains("events"), fixtures)
+    for (t <- fixtures)
+      assertZeroJobs(s"pqmeta-t-zero-jobs-$t")(T(spark, TestSpark.Sf, t))
+  }
+
+  test("T's schema equals Spark's inferred schema for every fixture") {
+    for (t <- fixtures) {
+      val inferred = spark.read.parquet(s"${TestSpark.Sf}/$t.parquet")
+      // events.ts is the loader's one conversion: µs TIMESTAMP_NTZ
+      val expect =
+        if (t == "events") inferred.withColumn("ts",
+          col("ts").cast("timestamp_ntz")).schema
+        else inferred.schema
+      assert(T(spark, TestSpark.Sf, t).schema === expect, t)
+    }
+  }
+
+  test("T keeps Spark's inference for directory tables") {
+    val dir = Tmp.dir("pqmeta_t_dir")
+    spark.range(0, 100).selectExpr("id", "CAST(id AS STRING) AS s")
+      .write.parquet(s"$dir/plain.parquet")
+    spark.range(0, 100).selectExpr("id", "id % 3 AS p")
+      .write.partitionBy("p").parquet(s"$dir/parted.parquet")
+    for (t <- Seq("plain", "parted")) {
+      val df = T(spark, dir, t)
+      assert(df.schema === spark.read.parquet(s"$dir/$t.parquet").schema, t)
+      assert(df.count() === 100L, t)
+    }
+    assert(T(spark, dir, "parted").columns.contains("p"),
+      "partition discovery")
+  }
+
+  test("T of a missing table fails with Spark's AnalysisException") {
+    val dir = Tmp.dir("pqmeta_t_missing")
+    for (t <- Seq("nope", "events")) {
+      val e = intercept[AnalysisException](T(spark, dir, t))
+      assert(e.getClass === classOf[AnalysisException], t)
+    }
+  }
+
+  test("T(events) leaves the session conf alone for a MICROS footer") {
+    val s = spark.newSession()
+    assert(s.conf.get(NanosAsLong) === "false")
+    val df = T(s, TestSpark.Sf, "events")
+    assert(df.schema("ts").dataType === TimestampNTZType)
+    assert(s.conf.get(NanosAsLong) === "false",
+      "nanosAsLong set for a MICROS footer")
+    EventOps.liveEvents(s, TestSpark.Sf)
+    assert(s.conf.get(NanosAsLong) === "false",
+      "liveEvents set nanosAsLong for a MICROS footer")
+  }
+
+  test("T(events) reads a TIMESTAMP(NANOS) footer as truncated µs") {
+    val dir = Tmp.dir("pqmeta_t_nanos")
+    val schema = MessageTypeParser.parseMessageType(
+      """message events {
+        |  required int64 event_id;
+        |  required int64 ts (TIMESTAMP(NANOS,false));
+        |}""".stripMargin)
+    val conf = new Configuration()
+    val w = ExampleParquetWriter
+      .builder(new Path(s"$dir/events.parquet"))
+      .withConf(conf).withType(schema).build()
+    val nanos = Seq(1700000000123456789L, 1700000000999999999L)
+    val groups = new SimpleGroupFactory(schema)
+    try nanos.zipWithIndex.foreach { case (ns, i) =>
+      w.write(groups.newGroup().append("event_id", i.toLong)
+        .append("ts", ns))
+    } finally w.close()
+    val footer =
+      ParquetMeta.fileFooter(spark, s"$dir/events.parquet").get
+    assert(ParquetMeta.timestampNanos(footer, "ts"))
+    assert(!ParquetMeta.timestampNanos(footer, "event_id"))
+
+    val s = spark.newSession()
+    val df = T(s, dir, "events")
+    assert(s.conf.get(NanosAsLong) === "true")
+    assert(df.schema("ts").dataType === TimestampNTZType)
+    assert(EventOps.liveEvents(s, dir).schema("ts").dataType ===
+      TimestampNTZType)
+    val got = df.orderBy("event_id").collect()
+      .map(_.getAs[java.time.LocalDateTime]("ts")).toSeq
+    val expect = nanos.map { ns =>
+      java.time.LocalDateTime.ofEpochSecond(ns / 1000000000L,
+        (ns % 1000000000L / 1000 * 1000).toInt, java.time.ZoneOffset.UTC)
+    }
+    assert(got === expect)
+  }
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** Asserts that `body` schedules no Spark job. Jobs are counted per job
+    * group, so late bus events from earlier tests cannot leak in. A
+    * sentinel action follows `body` (a bare RDD count is exactly ONE job;
+    * an AQE DataFrame action can run several): the listener bus is FIFO,
+    * so once the sentinel's job arrives, any job `body` had scheduled
+    * would already be here. */
+  private def assertZeroJobs(group: String)(body: => Any): Unit = {
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val l = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
-        // group-scope the count: late-arriving bus events from earlier
-        // suites/tests must not leak into this assertion
         if (j.properties != null &&
           group == j.properties.getProperty("spark.jobGroup.id"))
           jobs.add(j.jobId)
@@ -123,17 +219,13 @@ class ParquetMetaSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(l)
     spark.sparkContext.setJobGroup(group, "zero-jobs pin")
     try {
-      ParquetMeta.rowCount(spark, s"${TestSpark.Sf}/embeddings.parquet")
-      // sentinel action (a bare RDD count = exactly ONE job; an AQE
-      // DataFrame action can run several): the listener bus is FIFO, so
-      // once the sentinel's job arrives, any job rowCount had scheduled
-      // would already be here
+      body
       spark.sparkContext.parallelize(Seq(1), 1).count()
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (jobs.isEmpty && System.nanoTime() < deadline)
         Thread.sleep(20)
       assert(jobs.size === 1,
-        s"expected only the sentinel job, saw ${jobs.size}")
+        s"$group: expected only the sentinel job, saw ${jobs.size}")
     } finally {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(l)
