@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * see BASELINE.md). bench_full.json (next to the working dir) carries
   * the full single-shot per-query map plus `mink`, the complete min-of-k
   * map over headline ∪ slow-tail ∪ every floored op — the self-contained
-  * input to the 2×-floor escalation audit (VERDICT-r11 #1) — and
-  * `failed`, the ops that threw. A thrown op is never timed: its time to
+  * input to the 2×-floor escalation audit (VERDICT-r11 #1) — `codegen`,
+  * each op's Janino work (see [[fullRecord]]), and `failed`, the ops
+  * that threw. A thrown op is never timed: its time to
   * failure would read as a fast op, so it leaves the total, both maps
   * and the printed line, and is named in `failed` instead.
   */
@@ -164,15 +165,22 @@ object Bench {
     }
     val byName = SparkEntry.queries
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    def timeOne(h: String): Option[Double] = {
+    // Janino work per op: the single shot, and each re-run op's last rerun
+    val codegenSingle = scala.collection.mutable.Map.empty[String, Codegen]
+    val codegenRerun = scala.collection.mutable.Map.empty[String, Codegen]
+    def timeOne(h: String,
+        codegen: scala.collection.mutable.Map[String, Codegen])
+        : Option[Double] = {
+      val c0 = Codegen.now()
       val t = timed(h)(byName(h)(spark, sfDir).count())
       if (t.isEmpty) failed += h
+      else codegen(h) = Codegen.now() - c0
       t
     }
     // sorted order: reproducible run-to-run (Map iteration order is not)
     val results = byName.keys.toSeq.sorted
       .filter(name => only.forall(_(name)))
-      .flatMap(name => timeOne(name).map(name -> _))
+      .flatMap(name => timeOne(name, codegenSingle).map(name -> _))
     val total = results.map(_._2).sum
     // a filtered dev run must not clobber the synced full-run record
     val fullPath =
@@ -180,7 +188,8 @@ object Bench {
     def writeFull(mink: Option[Seq[(String, Double)]]): Unit =
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get(fullPath),
-        fullRecord(total, results, mink, failed.toSeq, sfDir))
+        fullRecord(total, results, mink, failed.toSeq, sfDir,
+          codegenSingle.toMap, codegenRerun.toMap))
       catch { case _: Throwable => () }
     // write the single-shot record BEFORE the (long) rerun phase — a
     // crash mid-rerun must not lose the full pass — then rewrite it
@@ -223,7 +232,8 @@ object Bench {
     val samples = scala.collection.mutable.LinkedHashMap(
       rerunOps.map { case (h, single) => h -> Vector(single) }: _*)
     def sample(h: String): Unit =
-      if (!failed(h)) timeOne(h).foreach(t => samples(h) :+= t)
+      if (!failed(h))
+        timeOne(h, codegenRerun).foreach(t => samples(h) :+= t)
     (2 to minK).foreach(_ => rerunOps.foreach { case (h, _) => sample(h) })
     // Adaptive escalation to min-of-5: an op whose min-of-3 still sits
     // above 2x its recorded clean-JVM floor (BASELINE.md / judge
@@ -259,15 +269,42 @@ object Bench {
     }
   }
 
+  /** Janino compiles and compile seconds, JVM-wide: in local mode the
+    * executors' generated code compiles in this JVM too. */
+  private[graft] final case class Codegen(compiles: Long, seconds: Double) {
+    def -(o: Codegen): Codegen =
+      Codegen(compiles - o.compiles, seconds - o.seconds)
+  }
+  private[graft] object Codegen {
+    def now(): Codegen = Codegen(
+      org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+        .compileTime / 1e9)
+  }
+
   /** The bench_full.json record: single-shot map, optional min-of-k
-    * map, and the ops that threw (in neither map). */
+    * map, the Janino work per timed op as `codegen` (`op -> {"single":
+    * [compiles, seconds], "rerun": [...]}`, where `rerun` is the last
+    * rerun of a re-run op), and the ops that threw (in neither map). A
+    * warm rerun that still compiles is an op whose generated code
+    * differs between runs, or a cache too small for the re-run set. */
   private[graft] def fullRecord(total: Double,
       single: Seq[(String, Double)], mink: Option[Seq[(String, Double)]],
-      failed: Seq[String], sf: String): String = {
+      failed: Seq[String], sf: String,
+      codegenSingle: Map[String, Codegen] = Map.empty,
+      codegenRerun: Map[String, Codegen] = Map.empty): String = {
     def obj(m: Seq[(String, Double)]): String =
       m.map { case (k, v) => s""""$k":${f3(v)}""" }.mkString("{", ",", "}")
+    val census = single.collect { case (k, _) if codegenSingle.contains(k) =>
+      Seq("single" -> codegenSingle.get(k), "rerun" -> codegenRerun.get(k))
+        .collect { case (r, Some(c)) =>
+          s""""$r":[${c.compiles},${f3(c.seconds)}]""" }
+        .mkString(s""""$k":{""", ",", "}")
+    }
     s"""{"total":${f3(total)},"n":${single.size},"queries":${obj(single)}""" +
       mink.map(m => s""","mink":${obj(m)}""").getOrElse("") +
+      census.mkString(""","codegen":{""", ",", "}") +
       failed.map(k => s""""$k"""").mkString(""","failed":[""", ",", "]") +
       s""","sf":"$sf"}"""
   }

@@ -17,9 +17,26 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * `lixsize`, the sorted-long-array merge intersect) in every new
   * session — the idiomatic Spark mechanism for shipping engine
   * extensions, vs. per-session `VecExprs.register`.
+  *
+  * It also sizes Spark's generated-class cache to
+  * [[org.apache.spark.sql.graftx.Bridge.CodegenCacheEntries]] classes, on
+  * the live `SparkContext`'s conf, unless the cache-size key already
+  * holds a value ([[org.apache.spark.sql.graftx.Bridge.sizeCodegenCache]]
+  * is the one place that names it). The cache is
+  * JVM-wide and Spark's default holds 100 classes, fewer than one pass
+  * over a few dozen graft ops generates, so a repeated query shape was
+  * recompiled by Janino every time. Spark applies extensions inside
+  * `getOrCreate`, before the session's SQL conf is built, and
+  * `CodeGenerator` reads the size from that conf once, at its first use
+  * in the JVM. The setting therefore only takes effect when this session
+  * is built before the JVM's first generated code; a JVM that already
+  * compiled code keeps the size it started with, silently. A value the
+  * user sets (builder `config`, `--conf`, or a `spark.*` system
+  * property) wins.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
+    org.apache.spark.sql.graftx.Bridge.sizeActiveCodegenCache()
     // maintenance-verb SQL (OPTIMIZE / VACUUM / DESCRIBE HISTORY) for
     // snap catalogs; everything else delegates to Spark's parser
     e.injectParser((_, delegate) =>

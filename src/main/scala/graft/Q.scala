@@ -35,7 +35,8 @@ trait QueryModule {
   * generations and TIMESTAMP(MICROS) in others, so the loader adapts to
   * the footer: NANOS is unreadable as a timestamp in Spark 4, so it is
   * read as raw nanos (`nanosAsLong`, set on the session only for a NANOS
-  * footer, or before inferring a directory) and truncated to µs — exactly
+  * footer — a directory's is read from one of its part files) and
+  * truncated to µs — exactly
   * DuckDB's `CAST(ts AS TIMESTAMP)` semantics (verified: DuckDB
   * truncates, and `ts div 1000` on positive longs truncates
   * identically); MICROS reads natively and only needs the NTZ cast.
@@ -51,7 +52,9 @@ object T {
           readNanosAsLong(s)
         s.read.schema(ParquetMeta.schema(s, path, footer)).parquet(path)
       case None =>
-        if (name == "events") readNanosAsLong(s)
+        if (name == "events" && ParquetMeta.partFooter(s, path)
+            .exists(ParquetMeta.timestampNanos(_, "ts")))
+          readNanosAsLong(s)
         s.read.parquet(path)
     }
     if (name != "events") df

@@ -72,6 +72,19 @@ object ParquetMeta {
     }
   }
 
+  /** The footer of one visible part file of directory `path`; `None`
+    * for a regular file, a missing path or a directory without one. */
+  def partFooter(s: SparkSession, path: String): Option[ParquetMetadata] = {
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(s.sessionState.newHadoopConf())
+    val isDir =
+      try fs.getFileStatus(dir).isDirectory
+      catch { case _: java.io.FileNotFoundException => false }
+    if (!isDir) None
+    else visibleFiles(fs, dir).find(_.getName.endsWith(".parquet"))
+      .flatMap(f => fileFooter(s, f.toString))
+  }
+
   /** The Spark schema of one file's footer, converted by Spark's own
     * per-file schema-inference function under `s`'s SQL conf. It keeps
     * the footer's non-null fields; a file source read with it applies
@@ -106,27 +119,30 @@ object ParquetMeta {
     val conf = s.sessionState.newHadoopConf()
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
-    val files = scala.collection.mutable.ArrayBuffer.empty[Path]
-    if (fs.getFileStatus(root).isDirectory) {
-      val rootUri = root.toUri.getPath
-      val it = fs.listFiles(root, true)
-      while (it.hasNext) {
-        val f = it.next()
-        val rel = f.getPath.toUri.getPath.stripPrefix(rootUri)
-          .stripPrefix("/")
-        val parts = rel.split('/')
-        val hidden =
-          parts.exists(p => p.startsWith(".") || p.startsWith("_"))
-        if (f.isFile && !hidden) {
-          require(parts.last.endsWith(".parquet"),
-            s"ParquetMeta($path): non-parquet data file " +
-              s"'${f.getPath}' — footer stats would under-report; use a " +
-              "scan for mixed-format directories")
-          files += f.getPath
-        }
+    val files =
+      if (!fs.getFileStatus(root).isDirectory) Seq(root)
+      else visibleFiles(fs, root).map { f =>
+        require(f.getName.endsWith(".parquet"),
+          s"ParquetMeta($path): non-parquet data file " +
+            s"'$f' — footer stats would under-report; use a " +
+            "scan for mixed-format directories")
+        f
+      }.toSeq
+    (conf, files)
+  }
+
+  /** The files under directory `root`, recursively, that no hidden path
+    * component (`.x` or `_x` below the root) hides, lazily listed. */
+  private def visibleFiles(fs: org.apache.hadoop.fs.FileSystem, root: Path)
+      : Iterator[Path] = {
+    val rootUri = root.toUri.getPath
+    val it = fs.listFiles(root, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(_.isFile).map(_.getPath)
+      .filterNot { p =>
+        p.toUri.getPath.stripPrefix(rootUri).stripPrefix("/").split('/')
+          .exists(c => c.startsWith(".") || c.startsWith("_"))
       }
-    } else files += root
-    (conf, files.toSeq)
   }
 
   /** Exact row count of a parquet file or directory (recursive over

@@ -253,11 +253,16 @@ private[graft] class SnapBatchScan(
         // table must not become 100k tasks, a single 10 GB file must
         // not become ONE. DV'd snapshots read whole files — the
         // position-skip counts rows from the file start, so a split
-        // would shift every later index.
+        // would shift every later index. Sizes follow Spark's file scan
+        // (`FilePartition`): every file also costs `openCost` bytes, and
+        // the target is bytes per core floored at `openCost`, so a small
+        // file stays one task instead of `parallelism` mostly empty
+        // ranges, while many small files still spread across cores.
         val all = slices(files)
-        val target = math.max(1L, math.min(
-          spark.sessionState.conf.filesMaxPartitionBytes,
-          math.max(1L, all.map(_.size).sum /
+        val conf = spark.sessionState.conf
+        val openCost = conf.filesOpenCostInBytes
+        val target = math.max(1L, math.min(conf.filesMaxPartitionBytes,
+          math.max(openCost, all.map(_.size + openCost).sum /
             math.max(1, spark.sparkContext.defaultParallelism))))
         val split: Seq[SnapFileSlice] =
           if (dvs.nonEmpty) all.toSeq
@@ -273,7 +278,7 @@ private[graft] class SnapBatchScan(
           if (bin.nonEmpty && binBytes + f.length > target) {
             bins += bin.toArray; bin = Vector.empty; binBytes = 0L
           }
-          bin :+= f; binBytes += f.length
+          bin :+= f; binBytes += f.length + openCost
         }
         if (bin.nonEmpty) bins += bin.toArray
         bins.result()

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftx
 
+import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -11,6 +12,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * DatasetFactory).
   */
 object Bridge {
+  /** Entries of Spark's JVM-wide generated-class cache that graft asks
+    * for. At Spark's default of 100, LRU eviction dropped each class
+    * before its next use, so every repeated query shape paid Janino
+    * again: one `analytic_mix` pass needs 100–300 classes, one round of
+    * `graft.Bench` reruns about 4000. Measured on those reruns, 1000
+    * entries still recompiled 3861 classes per round, 4000 and 8000
+    * only the ~2000 of ops whose generated source differs between runs.
+    */
+  val CodegenCacheEntries = 4000
+
+  /** Sets `spark.sql.codegen.cache.maxEntries` to [[CodegenCacheEntries]]
+    * unless `conf` already holds a value, which then wins. */
+  def sizeCodegenCache(conf: SparkConf): Unit =
+    conf.setIfMissing("spark.sql.codegen.cache.maxEntries",
+      CodegenCacheEntries.toString)
+
+  /** [[sizeCodegenCache]] on the live `SparkContext`'s own conf, which
+    * `private[spark]` keeps out of reach outside this package. Sessions
+    * built on that context merge it into their SQL conf. */
+  def sizeActiveCodegenCache(): Unit =
+    SparkContext.getActive.foreach(sc => sizeCodegenCache(sc.conf))
+
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 

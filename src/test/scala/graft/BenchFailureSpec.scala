@@ -37,4 +37,25 @@ class BenchFailureSpec extends AnyFunSuite {
       0.0, single, None, Seq.empty, "sf0.1"))
     assert(!first.has("mink") && first.get("failed").size() == 0)
   }
+
+  test("bench_full.json carries each op's Janino census") {
+    val single = Seq("ok_a" -> 1.0, "ok_b" -> 2.0)
+    val rec = new ObjectMapper().readTree(Bench.fullRecord(3.0, single,
+      Some(single.take(1)), Seq("boom"), "sf0.1",
+      codegenSingle = Map("ok_a" -> Bench.Codegen(12, 0.5),
+        "ok_b" -> Bench.Codegen(3, 0.0625)),
+      codegenRerun = Map("ok_a" -> Bench.Codegen(0, 0.0))))
+    val cg = rec.get("codegen")
+    assert(cg.size() == 2 && !cg.has("boom"))
+    def pair(op: String, run: String) = {
+      val p = cg.get(op).get(run)
+      (p.get(0).asLong(), p.get(1).asDouble())
+    }
+    assert(pair("ok_a", "single") == ((12L, 0.5)))
+    assert(pair("ok_a", "rerun") == ((0L, 0.0)))
+    assert(pair("ok_b", "single") == ((3L, 0.063)))
+    assert(!cg.get("ok_b").has("rerun"), "ok_b was never re-run")
+    assert(Bench.Codegen(5, 1.5) - Bench.Codegen(2, 0.5) ==
+      Bench.Codegen(3, 1.0))
+  }
 }

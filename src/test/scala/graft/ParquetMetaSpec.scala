@@ -163,6 +163,21 @@ class ParquetMetaSpec extends AnyFunSuite {
       "liveEvents set nanosAsLong for a MICROS footer")
   }
 
+  test("T(events) leaves the session conf alone for a MICROS directory") {
+    val dir = Tmp.dir("pqmeta_t_micros_dir")
+    // Spark writes TIMESTAMP_NTZ as INT64 TIMESTAMP(MICROS)
+    T(spark, TestSpark.Sf, "events").write.parquet(s"$dir/events.parquet")
+    assert(new java.io.File(s"$dir/events.parquet").isDirectory)
+    val footer = ParquetMeta.partFooter(spark, s"$dir/events.parquet")
+    assert(footer.exists(!ParquetMeta.timestampNanos(_, "ts")))
+    val s = spark.newSession()
+    val df = T(s, dir, "events")
+    assert(s.conf.get(NanosAsLong) === "false",
+      "nanosAsLong set for a MICROS directory")
+    assert(df.schema("ts").dataType === TimestampNTZType)
+    assert(df.count() === T(spark, TestSpark.Sf, "events").count())
+  }
+
   test("T(events) reads a TIMESTAMP(NANOS) footer as truncated µs") {
     val dir = Tmp.dir("pqmeta_t_nanos")
     val schema = MessageTypeParser.parseMessageType(

@@ -460,9 +460,13 @@ class SnapCatalogSpec extends AnyFunSuite {
     // byte-range splitting this table can only ever read as one task
     SnapTable.create(spark, root,
       orders.coalesce(1), "o_orderkey")
-    assert(SnapTable.load(root, 1).files.size == 1)
+    val one = SnapTable.load(root, 1).files
+    assert(one.size == 1)
+    // "big" = above maxPartitionBytes; the fixture file is a few tens
+    // of KB, below the open-cost floor that keeps small files whole
+    val bytes = new java.io.File(s"$root/${one.head.path}").length
     val saved = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "65536")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (bytes / 4).toString)
     try {
       val df = spark.sql("SELECT * FROM snapt.db1.splitpack")
       assert(df.rdd.getNumPartitions > 1,
@@ -484,7 +488,23 @@ class SnapCatalogSpec extends AnyFunSuite {
       SnapTable.load(root2, 1).files.size,
       s"${packed.rdd.getNumPartitions} partitions for " +
         s"${SnapTable.load(root2, 1).files.size} files — no packing")
+    // each file also weighs the open cost, as in Spark's file scan, so
+    // small files still spread across cores
+    assert(packed.rdd.getNumPartitions > 1, "all small files in one task")
     assert(packed.count() == orders.count())
+  }
+
+  test("a small one-file snapshot plans as one input partition") {
+    val root = s"$base/db1/smallone"
+    SnapTable.create(spark, root, orders.coalesce(1), "o_orderkey")
+    val one = SnapTable.load(root, 1).files
+    assert(one.size == 1)
+    assert(new java.io.File(s"$root/${one.head.path}").length <
+      spark.sessionState.conf.filesOpenCostInBytes)
+    val df = spark.sql("SELECT * FROM snapt.db1.smallone")
+    assert(df.rdd.getNumPartitions == 1,
+      "a file below the open cost must not split into byte ranges")
+    assert(df.count() == orders.count())
   }
 
   test("column pruning reaches the scan schema") {

@@ -6,22 +6,23 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
-/** Source-level guards over `src/main/scala`. */
+/** Source-level guards over `src/main/scala` (and `src/test/scala`). */
 class SourceLintSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala")
+  private val testSrc = Paths.get("src/test/scala")
 
-  /** `file:line: text` of every line under `src/main/scala` outside
-    * `allowed` that `banned` matches. */
-  private def hits(banned: scala.util.matching.Regex, allowed: String)
-      : List[String] = {
-    assert(Files.isDirectory(main.resolve("graft")), "run from the root")
-    val keep = main.resolve(allowed)
-    Files.walk(main).iterator().asScala
+  /** `file:line: text` of every line under `root` outside `allowed`
+    * (relative to `root`) that `banned` matches. */
+  private def hits(banned: scala.util.matching.Regex, allowed: String,
+      root: java.nio.file.Path = main): List[String] = {
+    assert(Files.isDirectory(root.resolve("graft")), "run from the root")
+    val keep = root.resolve(allowed)
+    Files.walk(root).iterator().asScala
       .filter(p => Files.isRegularFile(p) && p != keep)
       .flatMap { p =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
           case (line, i) if banned.findFirstIn(line).isDefined =>
-            s"${main.relativize(p)}:${i + 1}: ${line.trim}"
+            s"${root.relativize(p)}:${i + 1}: ${line.trim}"
         }
       }.toList
   }
@@ -42,5 +43,20 @@ class SourceLintSpec extends AnyFunSuite {
       "open footers with graft.sources.ParquetMeta.open, which passes " +
         "read options from the caller's Hadoop conf:\n" +
         found.mkString("\n"))
+  }
+
+  test("the codegen cache size has one home: Bridge.sizeCodegenCache") {
+    val bridge = "org/apache/spark/sql/graftx/Bridge.scala"
+    val named = hits(
+      """spark\.sql\.codegen\.cache\.maxEntries|CODEGEN_CACHE_MAX_ENTRIES""".r,
+      bridge)
+    // a builder that sets it would override GraftExtensions' size
+    val built = Seq(main, testSrc).flatMap(root => hits(
+      """config\(\s*"spark\.sql\.codegen\.cache\.maxEntries""".r,
+      "", root))
+    assert(named.isEmpty && built.isEmpty,
+      s"size Spark's generated-class cache only in $bridge, which " +
+        "GraftExtensions applies to every session it builds:\n" +
+        (named ++ built).mkString("\n"))
   }
 }
