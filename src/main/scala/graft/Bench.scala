@@ -134,25 +134,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // 8 measured fastest on this box across {4,8,16,32}: above 8 the
-    // per-task scheduling overhead of toy-scale partitions dominates,
-    // at 4 the wide ops are parallelism-starved (192 s vs ~125 s)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // size-targeted AQE coalescing (the production setting for big
-      // inputs too): with the default parallelismFirst=true AQE refuses
-      // to coalesce below the parallelism, so at bench scale every tiny
-      // shuffle pays `cpus` task launches
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      // single-JVM locality is meaningless; don't wait for it
-      .config("spark.locality.wait", "0s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     warmup(spark, sfDir)
     // dev loop: SPARK_GRAFT_ONLY=q1,q2 times a subset (driver leaves it unset)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -190,7 +172,10 @@ object Bench {
         java.nio.file.Paths.get(fullPath),
         fullRecord(total, results, mink, failed.toSeq, sfDir,
           codegenSingle.toMap, codegenRerun.toMap))
-      catch { case _: Throwable => () }
+      catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] writing $fullPath failed: $e")
+      }
     // write the single-shot record BEFORE the (long) rerun phase — a
     // crash mid-rerun must not lose the full pass — then rewrite it
     // with the min-of-k map at the end
@@ -212,9 +197,10 @@ object Bench {
     // escalation guard is only meaningful on a min-of-k sample, so the
     // driver run must produce one for the whole cleanFloor key set —
     // otherwise a first-shot JIT artifact on a non-headline floored op
-    // is indistinguishable from a regression without a separate OpTimer
-    // session. The complete min-of-k map lands in bench_full.json (the
-    // stdout line keeps its length guard and may truncate to headline).
+    // is indistinguishable from a regression without a separate
+    // SPARK_GRAFT_ONLY subset run. The complete min-of-k map lands in
+    // bench_full.json (the stdout line keeps its length guard and may
+    // truncate to headline).
     val minK = 3
     val slowTail = results
       .filterNot { case (k, _) => headline.contains(k) }
@@ -375,6 +361,8 @@ object Bench {
       li.limit(100).write.mode("overwrite").orc(s"$tmp/o")
       spark.read.orc(s"$tmp/o").count()
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-    } catch { case _: Throwable => () }
+    } catch {
+      case e: Throwable => System.err.println(s"[bench] warmup failed: $e")
+    }
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan of named queries (all oracle
   * queries if none named). `SPARK_GRAFT_SF_DIR` selects the fixture dir.
   */
@@ -9,13 +7,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark =
+      Session.local(Session.cpus, "spark.sql.session.timeZone" -> "UTC")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.all.map(_.name)
     names.foreach { n =>
       println(s"\n========== $n ==========")

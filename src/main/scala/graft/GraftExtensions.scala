@@ -5,13 +5,9 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Library entry point for `spark.sql.extensions`:
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  * }}}
-  *
+/** Library entry point for `spark.sql.extensions`: setting
+  * `spark.sql.extensions=graft.GraftExtensions` on a session's conf, as
+  * [[graft.Session.local]] does for every session graft builds,
   * registers graft's native Catalyst functions (`fvdot`/`fvl2`, the
   * codegen'd float-vector dot product and squared-L2 distance, and
   * `lixsize`, the sorted-long-array merge intersect) in every new

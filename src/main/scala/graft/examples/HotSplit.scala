@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 import org.apache.spark.sql.functions._
 
 /** Dev-only: the hot-group rehearsal for the triangle-salted candidate
@@ -28,12 +28,7 @@ object HotSplit {
   def main(args: Array[String]): Unit = {
     val sizes = args(0).split(",").map(_.trim.toLong).toSeq
     val cap = if (args.length > 1) args(1).toLong else 1000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Session.local(Session.cpus)
     sizes.foreach { n =>
       val t4 = s.range(n).selectExpr(
         "id AS doc_id",

@@ -1,7 +1,7 @@
 package graft.examples
 
 import graft.rc.RcPipeline
-import org.apache.spark.sql.SparkSession
+import graft.Session
 import org.apache.spark.sql.functions._
 
 /** End-to-end reservoir-computing example (the reference's "example
@@ -16,13 +16,7 @@ object RcDemo {
     val keys = args.headOption.map(_.toInt).getOrElse(8)
     val n = args.lift(1).map(_.toInt).getOrElse(1000)
     val horizon = args.lift(2).map(_.toInt).getOrElse(1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     import spark.implicits._
 
     val series = spark.read.format("rcseries")

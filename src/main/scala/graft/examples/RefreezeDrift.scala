@@ -1,6 +1,7 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Session
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only: the DRIFT rehearsal for `pipe_curation_refreeze` —
@@ -28,15 +29,7 @@ import org.apache.spark.sql.functions._
 object RefreezeDrift {
   def main(args: Array[String]): Unit = {
     val mults = args(0).split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Session.local(Session.cpus)
     val route = (df: DataFrame) => df
       .withColumn("cell", lit(0).cast("int"))
       .withColumn("scell", lit(0).cast("int"))

@@ -1,5 +1,6 @@
 package graft.examples
 
+import graft.Session
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -39,12 +40,7 @@ object ScaleFixture {
   def main(args: Array[String]): Unit = {
     val out = args(0)
     val m = args(1).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val s = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Session.local(Session.cpus)
     val zipf = args.length > 2 && args(2) == "zipf"
     writeAll(s, out, m, zipf)
     println(s"SCALEFIXTURE done: $out (multiplier $m" +

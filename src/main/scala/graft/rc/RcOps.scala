@@ -156,8 +156,10 @@ object RcOps extends QueryModule {
       // The design rows feed two jobs (Gram aggregation, then scoring);
       // measured at sf0.1, re-running the fold is CHEAPER than persisting
       // the 34-double design arrays (serialization dominates), so no cache.
-      // Round-4 OpTimer min-of-3 at sf0.1 local[8]: 1.25 s warm (first run
-      // 7.6 s pays ESN codegen) — at/below the round-2 anchor of 1.33 s.
+      // Round-4 in-JVM min-of-3 at sf0.1 local[8] (re-measure with
+      // SPARK_GRAFT_ONLY=rc_predict_mse graft.Bench, which records its
+      // `mink`): 1.25 s warm (first run 7.6 s pays ESN codegen) — at/below
+      // the round-2 anchor of 1.33 s.
       // The 3.41 s in BENCH_r03 was a single cold run, not a regression.
       (s, dir) => {
         import s.implicits._

@@ -34,7 +34,7 @@ class ParSpec extends AnyFunSuite {
 
   private def awaitActive(group: String): Unit = {
     val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (GraftTestHooks.activeJobs(sc, group).isEmpty) {
+    while (GraftTestHooks.activeJobs(sc, group, settleMs = 0).isEmpty) {
       assert(System.nanoTime() < deadline, s"no job of $group started")
       Thread.sleep(20)
     }
@@ -62,10 +62,13 @@ class ParSpec extends AnyFunSuite {
         }
       }
     }
+    // read before the active-job poll, whose settle time is not the
+    // scope's: a fork whose 10 s job ran on has already taken longer
+    val elapsed = seconds(t0)
     assert(e.getMessage == "body failed")
     assert(forkDone.get, "the scope exited before its fork finished")
     assert(GraftTestHooks.activeJobs(sc, group).isEmpty)
-    assert(seconds(t0) < 9, "the fork's job ran on instead of being " +
+    assert(elapsed < 9, "the fork's job ran on instead of being " +
       "cancelled")
   }
 
@@ -84,9 +87,10 @@ class ParSpec extends AnyFunSuite {
         }
       }
     }
+    val elapsed = seconds(t0)
     assert(innerDone.get)
     assert(GraftTestHooks.activeJobs(sc, group).isEmpty)
-    assert(seconds(t0) < 9)
+    assert(elapsed < 9)
   }
 
   test("join rethrows the fork's own exception, not ExecutionException") {

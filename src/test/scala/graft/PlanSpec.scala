@@ -157,6 +157,19 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("fvdot") || p.contains("floatvecdot"), p)
   }
 
+  test("vec_knn_cosine scores with codegen'd fvdot into a heap top-k") {
+    val p = planOf("vec_knn_cosine")
+    assert(p.contains("fvdot"), p)
+    assert(!p.contains("zip_with") && !p.contains("aggregate("), p)
+    assert(p.contains("TakeOrderedAndProject"), p)
+  }
+
+  test("vec_neardup_cosine scores with codegen'd fvdot, no HOF idiom") {
+    val p = planOf("vec_neardup_cosine")
+    assert(p.contains("fvdot"), p)
+    assert(!p.contains("zip_with"), p)
+  }
+
   test("data_kanon_suppress is two hash aggregates, no join") {
     val p = planOf("data_kanon_suppress")
     assert(!p.contains("Join"), p)

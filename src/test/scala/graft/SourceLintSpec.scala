@@ -59,4 +59,20 @@ class SourceLintSpec extends AnyFunSuite {
         "GraftExtensions applies to every session it builds:\n" +
         (named ++ built).mkString("\n"))
   }
+
+  test("sessions are built only by graft.Session") {
+    val found = Seq(main, testSrc).flatMap(root => hits(
+      """SparkSession\s*\.\s*builder""".r, "graft/Session.scala", root))
+    assert(found.isEmpty,
+      "build a session with graft.Session.local, passing only the " +
+        "settings that belong to the caller:\n" + found.mkString("\n"))
+  }
+
+  test("the extensions conf is set only by graft.Session") {
+    val found = Seq(main, testSrc).flatMap(root => hits(
+      """"spark\.sql\.extensions"""".r, "graft/Session.scala", root))
+    assert(found.isEmpty,
+      "graft.Session.local installs graft.GraftExtensions in every " +
+        "session it builds:\n" + found.mkString("\n"))
+  }
 }

@@ -2,19 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole suite. */
+/** One shared local session for the whole suite, built by the engine's
+  * own factory so the suite runs under the settings graft ships. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.local(4,
+    "spark.app.name" -> "graft-test",
+    "spark.sql.session.timeZone" -> "UTC")
   val Sf = "/root/testdata/sf0.001"
 }
