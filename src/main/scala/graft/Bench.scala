@@ -94,7 +94,7 @@ object Bench {
     // round-14 re-shapes: the df-ascending prefix order + hot-group
     // fence add a fixture-scale premium to the prefix consumers (one
     // df aggregation + token join + one fence aggregation per call;
-    // ccMinLabel pays an edge count + DECIMAL convergence sums) —
+    // the CC kernel pays an edge count + DECIMAL convergence sums) —
     // bought: the 2.3× Zipfian 10× win and the overflow-safe,
     // width-correct CC loop (BASELINE "Round-14" records)
     "dedup_crossmodal_cc" -> 8.43, "dedup_crossmodal_incr" -> 12.29,

@@ -7,8 +7,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark =
-      Session.local(Session.cpus, "spark.sql.session.timeZone" -> "UTC")
+    val spark = Session.local(Session.cpus)
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.all.map(_.name)
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -117,6 +117,21 @@ object StreamRun {
     s.conf.set(key, n.toString)
     try body finally s.conf.set(key, prev)
   }
+
+  /** Runs `body` with the RocksDB state store provider, then restores the
+    * session's previous provider (or unsets it). `transformWithState`
+    * needs RocksDB: its timers and list/map state use multiple column
+    * families, which the default HDFS-backed store does not have. */
+  def withRocksDb[A](s: SparkSession)(body: => A): A = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
+      "RocksDBStateStoreProvider")
+    try body finally prev match {
+      case Some(p) => s.conf.set(key, p)
+      case None => s.conf.unset(key)
+    }
+  }
 }
 
 /** Pack an ordered (a, b) id pair into ONE long — ids must fit 32 bits.

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The one place graft builds a `SparkSession`: the mains, the examples
   * and the test suite all run under the settings below, so they cannot
-  * drift apart. A caller adds only the settings that belong to it (a
-  * time zone, an output format) as `extra`, which are applied last.
+  * drift apart. A caller adds only the settings that belong to it (an
+  * app name, an output format) as `extra`, which are applied last.
   */
 object Session {
 
@@ -15,8 +15,8 @@ object Session {
     * parallelism-starved (192 s vs ~125 s). */
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
 
-  /** A `local[cpus]` session with graft's extensions and `cpus` shuffle
-    * partitions, log level WARN. */
+  /** A `local[cpus]` session with graft's extensions, `cpus` shuffle
+    * partitions and the UTC session time zone, log level WARN. */
   def local(cpus: Int, extra: (String, String)*): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -31,6 +31,9 @@ object Session {
       // single-JVM locality is meaningless; don't wait for it
       .config("spark.locality.wait", "0s")
       .config("spark.ui.enabled", "false")
+      // one time zone for every run, whatever the host's: timestamp
+      // casts, watermarks and the oracle compare all assume UTC
+      .config("spark.sql.session.timeZone", "UTC")
     val s = extra.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

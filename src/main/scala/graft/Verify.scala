@@ -9,7 +9,6 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     val only = args.drop(2).toSet
     val spark = Session.local(Session.cpus,
-      "spark.sql.session.timeZone" -> "UTC",
       // write µs-precision INT64 timestamps (not legacy INT96) so the
       // driver's DuckDB compare sees the same values Spark computed
       "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")

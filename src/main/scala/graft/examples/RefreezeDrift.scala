@@ -41,8 +41,6 @@ object RefreezeDrift {
       docs.count()
       val n = 5000L * m
       val mid = n / 2
-      def wave(f: Long => org.apache.spark.sql.Column) = docs.filter(
-        f(mid))
       val w0 = docs.filter(col("doc_id") >= mid)
       val w1 = docs.filter(col("doc_id") < mid)
       def build(): String = {

@@ -635,12 +635,8 @@ object EventOps extends QueryModule {
       (s, dir) => {
         import s.implicits._
         val name = s"live_idle_${System.nanoTime()}"
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
         StreamRun.withStateParts(s) {
-          s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-            "state.RocksDBStateStoreProvider")
-          try {
+          StreamRun.withRocksDb(s) {
             val in = liveEvents(s, dir)
               // watermarks require TIMESTAMP (LTZ); session tz is UTC so
               // the µs values are unchanged by the cast
@@ -657,9 +653,6 @@ object EventOps extends QueryModule {
               .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
               .start()
             q.awaitTermination()
-          } finally prev match {
-            case Some(p) => s.conf.set(key, p)
-            case None => s.conf.unset(key)
           }
         }
         s.table(name).orderBy("user_id")

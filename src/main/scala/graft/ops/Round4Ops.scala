@@ -302,14 +302,8 @@ object Round4Ops extends QueryModule {
       (s, dir) => {
         import s.implicits._
         val name = s"live_cepto_${System.nanoTime()}"
-        // transformWithState timers need the RocksDB provider (multiple
-        // column families) — same dance as stream_idle_timeout_live
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
         graft.StreamRun.withStateParts(s) {
-          s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-            "state.RocksDBStateStoreProvider")
-          try {
+          graft.StreamRun.withRocksDb(s) {
             val in = EventOps.liveEvents(s, dir)
               .withColumn("ts", col("ts").cast("timestamp"))
               .withWatermark("ts", "10 minutes")
@@ -323,9 +317,6 @@ object Round4Ops extends QueryModule {
               .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
               .start()
             q.awaitTermination()
-          } finally prev match {
-            case Some(p) => s.conf.set(key, p)
-            case None => s.conf.unset(key)
           }
         }
         s.table(name)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, QueryModule, T}
+import graft.graph.Cc
 import graft.Det._
 import org.apache.spark.sql.functions._
 
@@ -165,12 +166,9 @@ object TextOps2 extends QueryModule {
       // >= 0.8 edges on the same blocked slice as text_dedup_near):
       // every doc gets the min doc_id of its duplicate cluster — the
       // transitive-closure step real dedup needs (A~B, B~C ⇒ {A,B,C}
-      // dedup together even when A!~C). Pregel-style min-label
-      // propagation: each round is one join + min-agg, state is one
-      // label per node, rounds = cluster diameter (tiny for dup
-      // clusters). At 100 TB this is the alternating large-star/
-      // small-star pattern; labels monotonically decrease so the
-      // exact-sum convergence test is a cheap scalar per round.
+      // dedup together even when A!~C). The components come from the one
+      // CC kernel (graft.graph.Cc: min-label propagation with pointer
+      // jumping, exact convergence certificate).
       // Oracle: DuckDB recursive-CTE reachability, min over reach set.
       (s, dir) => {
         val toks = T(s, dir, "documents")
@@ -189,67 +187,11 @@ object TextOps2 extends QueryModule {
           .filter(round(col("inter") / (size(col("set_a")) +
             size(col("set_b")) - col("inter")), 6) >= 0.8)
           .select("doc_a", "doc_b")
-        val edges = pairs.select(col("doc_a").as("src"),
-            col("doc_b").as("dst"))
-          .union(pairs.select(col("doc_b").as("src"),
-            col("doc_a").as("dst")))
-          .persist()
-        // NOTE on scale: at 100 TB first restrict the loop frame to
-        // edge-incident nodes (isolated docs are singleton components and
-        // never change) and union the singletons back at the end — the
-        // loop then iterates over the dup GRAPH, not the corpus. At
-        // fixture scale that variant was measured 2x SLOWER (the extra
-        // distinct/anti-join stages dominate the ~200-node slice), so the
-        // shipped form keeps the whole slice in the frame.
-        // the loop's frames are label tables of a few hundred rows: size
-        // the per-round shuffles to the DATA (like StreamRun does for
-        // state), not the core count — 12+ stages of 32 near-empty tasks
-        // are pure scheduling overhead. At 100 TB labels are sized to the
-        // corpus and this would stay at the session width.
-        val partsKey = "spark.sql.shuffle.partitions"
-        val prevParts = s.conf.get(partsKey)
-        val out = graft.Tmp.dir("graft_cc")
-        try {
-          s.conf.set(partsKey, "4")
-          var labels = toks.select(col("doc_id"),
-            col("doc_id").as("comp")).persist()
-          var total = labels.agg(sum("comp")).first().getLong(0)
-          var converged = false
-          var iters = 0
-          while (!converged && iters < 20) {
-            // one message-passing join per round: every edge (src->dst)
-            // forwards src's label to dst; union with the current labels
-            // and take the min. Equivalent to the two-sided neighbor-min
-            // (edges hold both directions) at half the joins and shuffles
-            // per round.
-            val msgs = edges
-              .join(labels, col("src") === col("doc_id"))
-              .select(col("dst").as("doc_id"), col("comp"))
-            val next = labels.select("doc_id", "comp").union(msgs)
-              .groupBy(col("doc_id"))
-              .agg(min(col("comp")).as("comp"))
-              .persist()
-            val newTotal = next.agg(sum("comp")).first().getLong(0)
-            labels.unpersist()
-            labels = next
-            converged = newTotal == total
-            total = newTotal
-            iters += 1
-          }
-          // a diameter->20 graph would otherwise silently ship wrong labels
-          if (!converged) throw new IllegalStateException(
-            s"text_dedup_cc: label propagation not converged after $iters " +
-              "iterations — component diameter exceeds the cap")
-          // materialize the converged labels and return a clean scan plan:
-          // no cache leak, and the (already-executed) iterative lineage
-          // isn't re-run when the caller executes the result
-          labels.write.mode("overwrite").parquet(out)
-          labels.unpersist()
-        } finally {
-          edges.unpersist()
-          s.conf.set(partsKey, prevParts)
-        }
-        s.read.parquet(out).orderBy("doc_id")
+        Cc.minLabel(s, toks.select(col("doc_id").as("id")),
+            pairs.select(col("doc_a").as("a"), col("doc_b").as("b")),
+            "text_dedup_cc")
+          .select(col("id").as("doc_id"), col("comp"))
+          .orderBy("doc_id")
       },
       Some(
         "WITH RECURSIVE " +

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Q, QueryModule}
+import graft.graph.Cc
 import graft.Det._
 import org.apache.spark.sql.functions._
 
@@ -155,99 +156,23 @@ object Wave55Ops extends QueryModule {
     ),
     Q(
       "graph_connected_components",
-      // Connected components by min-label propagation WITH pointer
-      // jumping (label ← min(neighbor labels, label-of-label)): the jump
-      // halves label-chain depth each round, so rounds are
-      // O(log diameter) — the property that makes CC tractable on
-      // billion-edge graphs — vs plain propagation's O(diameter). Labels
-      // decrease monotonically, so the exact label-sum is a cheap scalar
-      // convergence certificate per round. Output: the 20 largest
+      // Connected components of the co-purchase graph through the one
+      // CC kernel (graft.graph.Cc: min-label propagation with pointer
+      // jumping, O(log diameter) rounds, exact convergence certificate).
+      // Nodes are the distinct edge endpoints. Output: the 20 largest
       // components. Oracle: DuckDB recursive reachability, min over the
       // reach set (quadratic in component size — fine at oracle scale,
       // which is exactly why the distributed form exists).
       (s, dir) => {
         val e = GraphBase.edges(s, dir)
-        val verts = e.select(col("u").as("x"))
-          .unionAll(e.select(col("v").as("x"))).distinct()
-        val sym = e.select(col("u").as("src"), col("v").as("dst"))
-          .unionAll(e.select(col("v").as("src"), col("u").as("dst")))
-          .persist()
-        // label frames: size shuffles to the DATA, not core count (same
-        // rationale as text_dedup_cc) — but never a pinned constant: 4
-        // is right at fixture scale and starves the loop at 100x. The
-        // edge count comes from the materialized edge parquet's footers
-        // (zero jobs); ~250k label rows per partition.
-        val eRows = e.inputFiles
-          .map(f => graft.sources.ParquetMeta.rowCount(s, f)).sum
-        val partsKey = "spark.sql.shuffle.partitions"
-        val bcKey = "spark.sql.autoBroadcastJoinThreshold"
-        val prevParts = s.conf.get(partsKey)
-        val prevBc = s.conf.get(bcKey)
-        val out = graft.Tmp.dir("graft_graph_cc")
-        try {
-          s.conf.set(partsKey, math.max(4L, eRows / 125000L).toString)
-          // no size-threshold broadcasts inside the loop: BOTH loop
-          // frames (labels, mins) are |V|-sized — they scale with the
-          // graph, so a broadcast is never the right plan at scale, and
-          // at fixture scale the per-round broadcast build jobs the
-          // honest stats would now trigger are pure overhead (measured
-          // +1.1 s over the shuffled 4-partition rounds at sf0.1)
-          s.conf.set(bcKey, "-1")
-          // checkpoint each round THROUGH Bridge.localCheckpointHonestStats,
-          // not a bare localCheckpoint: the bare form carries the parent
-          // plan's ESTIMATED stats forward, join estimates multiply, and
-          // the pointer jump is a SELF-join — so the carried sizeInBytes
-          // SQUARES per round and by round ~18 every Catalyst stats
-          // visit does multi-million-digit BigInteger multiplies on the
-          // driver (measured: the round-12 10x scale rehearsal pinned
-          // one core >12 min inside visitJoin with zero tasks running).
-          // The honest-stats checkpoint swaps in the materialized block
-          // size — bounded forever, and truer for planning. It also
-          // truncates lineage exactly like the bare checkpoint (the
-          // round-N plan would otherwise nest every previous round's
-          // join/union tree — persist caches DATA but not PLAN size).
-          val cp = org.apache.spark.sql.graftx.Bridge
-            .localCheckpointHonestStats _
-          var labels = cp(verts.select(col("x"), col("x").as("comp")))
-          var total = labels.agg(sum("comp")).first().getLong(0)
-          var converged = false
-          var iters = 0
-          while (!converged && iters < 25) {
-            val msgs = sym
-              .join(labels, col("src") === col("x"))
-              .select(col("dst").as("x"), col("comp"))
-            // checkpointed deliberately: the pointer jump consumes mins
-            // TWICE, and a same-session A/B measured the materialization
-            // faster than recomputing the agg on both sides (2.45 vs
-            // 2.89 s min-of-3 at sf0.1)
-            val mins = cp(labels.select("x", "comp").union(msgs)
-              .groupBy("x").agg(min("comp").as("comp")))
-            // pointer jump: comp(x) ← comp(comp(x)) — halves label-chain
-            // depth, so rounds stay O(log diameter)
-            val next = cp(mins.as("a")
-              .join(mins.select(col("x").as("cx"),
-                col("comp").as("ccomp")).as("b"),
-                col("a.comp") === col("cx"), "left")
-              .select(col("a.x").as("x"),
-                coalesce(col("ccomp"), col("a.comp")).as("comp")))
-            val newTotal = next.agg(sum("comp")).first().getLong(0)
-            labels = next
-            converged = newTotal == total
-            total = newTotal
-            iters += 1
-          }
-          labels.groupBy("comp")
-            .agg(count(lit(1)).as("n_vertices"))
-            .orderBy(col("n_vertices").desc, col("comp"))
-            .limit(20)
-            .write.mode("overwrite").parquet(out)
-        } finally {
-          sym.unpersist()
-          s.conf.set(partsKey, prevParts)
-          s.conf.set(bcKey, prevBc)
-        }
-        s.read.parquet(out)
+        val verts = e.select(col("u").as("id"))
+          .unionAll(e.select(col("v").as("id"))).distinct()
+        Cc.minLabel(s, verts, e.select(col("u").as("a"), col("v").as("b")),
+            "graph_connected_components")
+          .groupBy("comp")
+          .agg(count(lit(1)).as("n_vertices"))
           .orderBy(col("n_vertices").desc, col("comp"))
+          .limit(20)
       },
       Some(
         "WITH RECURSIVE " +

@@ -246,12 +246,8 @@ object Wave58Ops extends QueryModule {
         import org.apache.spark.sql.types._
         import s.implicits._
         val name = s"live_neardup_${System.nanoTime()}"
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
         graft.StreamRun.withStateParts(s) {
-          s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-            "state.RocksDBStateStoreProvider")
-          try {
+          graft.StreamRun.withRocksDb(s) {
             val schema = StructType(Seq(
               StructField("doc_id", LongType),
               StructField("text", StringType),
@@ -275,9 +271,6 @@ object Wave58Ops extends QueryModule {
               .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
               .start()
             q.awaitTermination()
-          } finally prev match {
-            case Some(p) => s.conf.set(key, p)
-            case None => s.conf.unset(key)
           }
         }
         // a pair colliding in several bands emits once per band

@@ -256,12 +256,8 @@ object Wave61Ops extends QueryModule {
           .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
           .sortBy(_._1)
         val name = s"live_semdedup_${System.nanoTime()}"
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
         graft.StreamRun.withStateParts(s) {
-          s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-            "state.RocksDBStateStoreProvider")
-          try {
+          graft.StreamRun.withRocksDb(s) {
             val schema = StructType(Seq(
               StructField("vec_id", LongType),
               StructField("embedding", ArrayType(FloatType)),
@@ -289,9 +285,6 @@ object Wave61Ops extends QueryModule {
                 org.apache.spark.sql.streaming.Trigger.AvailableNow())
               .start()
             q.awaitTermination()
-          } finally prev match {
-            case Some(p) => s.conf.set(key, p)
-            case None => s.conf.unset(key)
           }
         }
         // one key per pair (unlike the 16-band text twin): no distinct

@@ -453,12 +453,8 @@ object Wave62Ops extends QueryModule {
           .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
           .sortBy(_._1)
         val name = s"live_bootstrap_${System.nanoTime()}"
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
         graft.StreamRun.withStateParts(s) {
-          s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-            "state.RocksDBStateStoreProvider")
-          try {
+          graft.StreamRun.withRocksDb(s) {
             val schema = StructType(Seq(
               StructField("vec_id", LongType),
               StructField("embedding", ArrayType(FloatType)),
@@ -495,9 +491,6 @@ object Wave62Ops extends QueryModule {
               .trigger(Trigger.AvailableNow())
               .start()
             q.awaitTermination()
-          } finally prev match {
-            case Some(p) => s.conf.set(key, p)
-            case None => s.conf.unset(key)
           }
         }
         s.table(name).orderBy("vec_a", "vec_b")

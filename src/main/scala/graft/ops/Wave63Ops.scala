@@ -307,12 +307,8 @@ object Wave63Ops extends QueryModule {
           slice.filter(col("doc_id") % 2 === 0), 0L)
         val initKV = neardupSeed(s, txroot)
         val name = s"live_bootnd_${System.nanoTime()}"
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
         graft.StreamRun.withStateParts(s) {
-          s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-            "state.RocksDBStateStoreProvider")
-          try {
+          graft.StreamRun.withRocksDb(s) {
             val schema = StructType(Seq(
               StructField("doc_id", LongType),
               StructField("text", StringType),
@@ -334,9 +330,6 @@ object Wave63Ops extends QueryModule {
               .trigger(Trigger.AvailableNow())
               .start()
             q.awaitTermination()
-          } finally prev match {
-            case Some(p) => s.conf.set(key, p)
-            case None => s.conf.unset(key)
           }
         }
         // a pair colliding in several bands emits once per band

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Par, Q, QueryModule, T}
+import graft.graph.Cc
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -62,179 +63,16 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * at e≈1.65 (block size grows with n → block² work); the prefix
   * filter cut the measured funnel exponent to ~0.8. The sem side is
   * cell-bounded (n·√n routing + within-cell pairs, never all-pairs).
-  * Connected components is ccMinLabel (honest-stats checkpointed,
-  * pointer-jumped — see its scaladoc). The incremental serve adds two
+  * Connected components come from [[graft.graph.Cc.minLabel]], the
+  * engine's one CC kernel (honest-stats checkpointed, pointer-jumped,
+  * exact convergence certificate — see its scaladoc); this module holds
+  * only its composed callers. The incremental serve adds two
   * ingest commits + one serve to hybrid_index_serve's cost — fixed
   * transactional overhead that amortizes with batch size. The funnel
   * runs ONCE per (JVM, dir) as a materialized per-doc ledger; both
   * funnel artifacts are reads of that table.
   */
 object Wave64Ops extends QueryModule {
-
-  /** Connected components by min-label propagation WITH pointer
-    * jumping over an undirected edge set — the graph_connected_
-    * components machinery (Wave55) factored for the composed ops
-    * (crossmodal decision, funnel dedup stages). `nodes(id)`,
-    * `edges(a, b)` (any orientation; symmetrized here). Returns a
-    * CLEAN checkpoint-backed `(id, comp)` frame (a LogicalRDD with
-    * truncated lineage and honest stats): the iterative lineage is
-    * never re-executed by consumers — re-execution is a cached-block
-    * scan — and the blocks are ContextCleaner-reclaimed once the frame
-    * is unreachable.
-    *
-    * Loop discipline (all three are load-bearing — this helper first
-    * shipped as a persist/unpersist union loop and OOM'd the driver at
-    * sf0.1 on the dense near-dup slice: the round-k plan nests every
-    * previous round's union/join tree TWICE, so plan size doubles per
-    * round — persist caches data, not plan size):
-    *  - every round-carried frame goes through
-    *    `Bridge.localCheckpointHonestStats` — lineage truncated AND
-    *    the materialized block size swapped in for the parent's
-    *    estimated stats (a bare localCheckpoint carries estimates that
-    *    SQUARE through the pointer-jump self-join — the round-12
-    *    rehearsal's exponential-driver-cost bug);
-    *  - pointer jumping (comp(x) ← comp(comp(x))) halves label-chain
-    *    depth per round, so rounds stay O(log diameter) — a within-
-    *    cell cosine chain can have diameter ~cell size, which a plain
-    *    min-label loop would pay linearly;
-    *  - no size-threshold broadcasts inside the loop: both loop frames
-    *    are |V|-sized and scale with the corpus. Shuffle width follows
-    *    the DATA, never a pinned constant — the Wave55
-    *    graph_connected_components formula (~250k edge rows per
-    *    partition, floor 4): 4 partitions are right at fixture scale
-    *    and a straight parallelism cap at 100 TB. The edge count is a
-    *    cached-block scan of the already-checkpointed edge frame, not
-    *    a recompute.
-    * RE-ENTRANT (round-14 continuation; §18.1 #4): the loop runs in an
-    * ISOLATED CLONED SESSION — `Bridge.isolatedSession` snapshots the
-    * caller's conf, the input plans are rebound into the clone
-    * (`Bridge.inSession`), and the width/broadcast overrides mutate
-    * only the clone. The caller's session conf is never touched, so
-    * concurrent ccMinLabel calls (or any concurrent query on the
-    * caller's session) cannot observe or stomp each other's overrides
-    * — Wave66Spec races two calls on one session to pin it.
-    *
-    * CLUSTER CAVEATS (r15, ADVICE-r14 — local-mode-exact by design):
-    * (a) the convergence certificate and the edge-count width ride on
-    * observe() metrics, which are accumulator-based: task re-execution
-    * (speculation, stage resubmission after fetch failure) can apply an
-    * update twice on a real cluster — local mode never re-executes, so
-    * the sums are exact here; a cluster deployment should cross-check
-    * the final round with one exact aggregation over the checkpointed
-    * labels (a cached-block scan). (b) the returned frame is
-    * localCheckpoint-backed: blocks are non-replicated and
-    * executor-local, so on any executor loss the frame is
-    * unrecoverable (the pre-r14 parquet round-trip was durable) — a
-    * cluster deployment should swap in reliable checkpointing or the
-    * parquet round-trip. */
-  private[graft] def ccMinLabel(s: SparkSession, nodes: DataFrame,
-      edges: DataFrame, what: String): DataFrame = {
-    val cp = org.apache.spark.sql.graftx.Bridge
-      .localCheckpointHonestStats _
-    val iso = org.apache.spark.sql.graftx.Bridge.isolatedSession(s)
-    def bind(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftx.Bridge.inSession(iso, df)
-    val partsKey = "spark.sql.shuffle.partitions"
-    val bcKey = "spark.sql.autoBroadcastJoinThreshold"
-    locally {
-      iso.conf.set(bcKey, "-1")
-      // r14 optimization: every scalar this loop needs (edge count for
-      // the shuffle width, the per-round convergence sum) rides as an
-      // observe() metric on the checkpoint materialization it already
-      // pays for — the separate count()/first() job per round is gone.
-      // localCheckpoint is eager, so the observation is always
-      // delivered by the time it is read.
-      def obsSum = sum(col("comp").cast("decimal(38,0)")).as("s")
-      def sumOf(o: org.apache.spark.sql.Observation)
-          : java.math.BigDecimal =
-        o.get.get("s").filter(_ != null)
-          .map(_.asInstanceOf[java.math.BigDecimal])
-          .getOrElse(java.math.BigDecimal.ZERO)
-      val eObs = org.apache.spark.sql.Observation()
-      val e = cp(bind(edges.select(col("a").as("src"),
-          col("b").as("dst"))
-        .union(edges.select(col("b").as("src"), col("a").as("dst"))))
-        .observe(eObs, count(lit(1)).as("n")))
-      val eRows = eObs.get.apply("n").asInstanceOf[Long]
-
-      // EDGELESS graph — every node is its own component, no
-      // propagation round can change anything. The delta-CC callers
-      // (live funnel, crossmodal incr) routinely pass empty
-      // perturbation subgraphs; skip the loop, its convergence jobs
-      // and the final materialization outright.
-      if (eRows == 0L)
-        return org.apache.spark.sql.graftx.Bridge.inSession(s,
-          cp(bind(nodes.select(col("id"), col("id").as("comp")))))
-      iso.conf.set(partsKey, math.max(4L, eRows / 125000L).toString)
-      // r15: the initial labels are a NARROW projection over the
-      // caller's (checkpointed) node frame — round 1 references it
-      // twice (union side + message join side), both cheap re-scans,
-      // so the former eager checkpoint + initial-sum job bought
-      // nothing: with eRows > 0 (the edgeless case short-circuited
-      // above) every edge (a, b), a ≠ b, strictly lowers the round-1
-      // sum, so round 1 can never be the fixed point — seed `total`
-      // null and skip the first comparison instead of materializing a
-      // sum to compare against. One driver job saved per call (6 calls
-      // per pipe_curation_live op, 1 per graph probe).
-      var labels = bind(nodes.select(col("id"), col("id").as("comp")))
-      // convergence certificate: exact DECIMAL(38,0) label sum —
-      // labels decrease monotonically so sum equality IS a fixed
-      // point, but a Long sum wraps past ~1e10 64-bit ids (false
-      // convergence / spurious non-convergence at corpus scale);
-      // 38 digits hold sum(2^63 · 1e10 rows) ≈ 9e28 with room
-      var total: java.math.BigDecimal = null
-      var converged = false
-      var iters = 0
-      while (!converged && iters < 25) {
-        val msgs = e.join(labels, col("src") === col("id"))
-          .select(col("dst").as("id"), col("comp"))
-        val mObs = org.apache.spark.sql.Observation()
-        val mins = cp(labels.select("id", "comp").union(msgs)
-          .groupBy(col("id"))
-          .agg(min(col("comp")).as("comp"))
-          .observe(mObs, obsSum))
-        val mTotal = sumOf(mObs)
-        if (total != null && mTotal.compareTo(total) == 0) {
-          // r15: fixed point detected on the PROPAGATE step — labels
-          // are monotone non-increasing, so an unchanged sum means
-          // mins == labels pointwise, i.e. every edge's endpoints
-          // already share a label and that label is the component min
-          // (it propagated from the min id). The pointer jump maps a
-          // fixed point to itself, so the final round's jump
-          // checkpoint (one driver job per call — this helper runs
-          // 6× per pipe_curation_live op, once per graph_* probe) is
-          // provably a no-op: skip it.
-          labels = mins
-          converged = true
-        } else {
-          val nObs = org.apache.spark.sql.Observation()
-          // pointer jump: comp(id) ← comp(comp(id))
-          val next = cp(mins.as("a")
-            .join(mins.select(col("id").as("cid"),
-              col("comp").as("ccomp")).as("b"),
-              col("a.comp") === col("cid"), "left")
-            .select(col("a.id").as("id"),
-              coalesce(col("ccomp"), col("a.comp")).as("comp"))
-            .observe(nObs, obsSum))
-          total = sumOf(nObs)
-          labels = next
-        }
-        iters += 1
-      }
-      if (!converged) throw new IllegalStateException(
-        s"$what: label propagation not converged after $iters " +
-          "iterations — component diameter exceeds the cap")
-      // r14 optimization: return the final CHECKPOINTED frame (rebound
-      // to the caller's session) instead of a parquet write + re-read
-      // round-trip — the LogicalRDD already has truncated lineage and
-      // honest stats, so consumers re-execute only a cached-block scan;
-      // two jobs + one temp-dir round-trip saved per call (this helper
-      // runs 6× inside one pipe_curation_live op alone). The blocks are
-      // session-scoped like every localCheckpoint and are reclaimed by
-      // the ContextCleaner once the frame is unreachable.
-      org.apache.spark.sql.graftx.Bridge.inSession(s, labels)
-    }
-  }
 
   /** Within-bucket semantic match pairs `(a, b)`, a < b: exact int64
     * grid dot / 1e9-rounded cosine > CosThreshold inside each (cell,
@@ -514,7 +352,7 @@ object Wave64Ops extends QueryModule {
     * (pipe_curation_ledger) so the stage semantics cannot drift.
     * `keeperOf` maps every stage-2 doc to its exact-dup keeper (min
     * doc_id per content fingerprint); `c4`/`c5` are the near/sem CC
-    * label tables (parquet-backed). Call `unpersist()` after the
+    * label tables (checkpoint-backed). Call `unpersist()` after the
     * consumer has materialized its result. */
   private[ops] final case class Funnel(docs: DataFrame, s1: DataFrame,
       s2: DataFrame, s3: DataFrame, keeperOf: DataFrame, c4: DataFrame,
@@ -577,7 +415,7 @@ object Wave64Ops extends QueryModule {
     val t4 = s3.select(col("doc_id"), col("lang"), col("source"),
       array_sort(array_distinct(col("toks"))).as("ts"))
     val p4 = prefixJaccardPairs(t4, Seq("lang", "source"))
-    val c4 = ccMinLabel(s, s3.select(col("doc_id").as("id")), p4,
+    val c4 = Cc.minLabel(s, s3.select(col("doc_id").as("id")), p4,
       "pipe_curation_funnel:near")
     val s4 = s3.join(
       c4.filter(col("id") === col("comp"))
@@ -590,7 +428,7 @@ object Wave64Ops extends QueryModule {
       .join(s4.select(col("doc_id").as("vec_id")),
         Seq("vec_id"), "left_semi")
       .persist()
-    val c5 = ccMinLabel(s, f5.select(col("vec_id").as("id")),
+    val c5 = Cc.minLabel(s, f5.select(col("vec_id").as("id")),
       semPairs(f5), "pipe_curation_funnel:sem")
     val s5 = s4.join(
       c5.filter(col("id") =!= col("comp"))
@@ -835,7 +673,7 @@ object Wave64Ops extends QueryModule {
         // components over the UNION graph on doc_id ≅ vec_id; nodes =
         // every document (isolated docs are their own survivor)
         val nodes = T(s, dir, "documents").select(col("doc_id").as("id"))
-        val comp = ccMinLabel(s, nodes, lexM.union(semM),
+        val comp = Cc.minLabel(s, nodes, lexM.union(semM),
           "dedup_crossmodal_cc")
         val lexIds = lexM.select(col("a").as("id"))
           .union(lexM.select(col("b").as("id"))).distinct()
@@ -1097,14 +935,14 @@ object Wave64Ops extends QueryModule {
         // r15 (guide §2.6): the lex and sem match computations are
         // independent — materialize them CONCURRENTLY as honest-stats
         // checkpoints instead of lazy persists first populated (and
-        // branch-raced) inside ccMinLabel's w0 edge job
+        // branch-raced) inside Cc.minLabel's w0 edge job
         val (lex, sem) = crossmodalPairs(s, dir)
         val even = (c: String) => col(c) % 2 === 0
         val docs = T(s, dir, "documents").select(col("doc_id").as("id"))
         val txroot = graft.Tmp.dir("graft_xmodal_incr")
         val w0edges = lex.filter(even("a") && even("b"))
           .union(sem.filter(even("a") && even("b")))
-        val l0 = ccMinLabel(s, docs.filter(even("id")), w0edges,
+        val l0 = Cc.minLabel(s, docs.filter(even("id")), w0edges,
           "dedup_crossmodal_incr:w0")
         val w0rows = l0.select(lit(0L).as("wave"), col("id"),
           col("comp"))
@@ -1120,7 +958,7 @@ object Wave64Ops extends QueryModule {
           .select(col("id").as("a"), col("comp").as("b"))
         val w1edges = lex.filter(!(even("a") && even("b")))
           .union(sem.filter(!(even("a") && even("b"))))
-        val l1 = ccMinLabel(s, docs, w1edges.union(links),
+        val l1 = Cc.minLabel(s, docs, w1edges.union(links),
           "dedup_crossmodal_incr:w1")
         val changed = l1
           .join(prev.withColumnRenamed("comp", "pcomp"),

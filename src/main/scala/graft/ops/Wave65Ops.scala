@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{Par, Q, QueryModule, T, Tmp}
+import graft.graph.Cc
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -240,7 +241,7 @@ object Wave65Ops extends QueryModule {
       // other ~3 levels deep and several times each, and persist
       // caches DATA but not PLAN size — the nested analyzed trees
       // multiply until explainString alone OOMs the driver (the
-      // round-13 ccMinLabel incident, reproduced here by the first
+      // round-13 CC-kernel incident, reproduced here by the first
       // persist-based cut of this function). The checkpoint truncates
       // lineage AND swaps in measured stats (broadcast decisions stay
       // honest). Blocks are short-lived per wave and GC'd.
@@ -248,7 +249,7 @@ object Wave65Ops extends QueryModule {
         org.apache.spark.sql.graftx.Bridge
           .localCheckpointHonestStats(df)
       // (r15, VERDICT-r14 #7) the WHOLE wave plans in an isolated
-      // cloned session — the ccMinLabel discipline applied to the
+      // cloned session — the Cc.minLabel discipline applied to the
       // ingest itself: the shuffle-width override below mutates only
       // the clone, so a concurrent query on the caller's session can
       // never observe (or stomp) wave-scoped conf, and no try/finally
@@ -262,8 +263,9 @@ object Wave65Ops extends QueryModule {
       // serializing five driver round-trips per wave. The row counts
       // the width decision needs ride as observe() metrics on the
       // materializations already paid — the two separate count() jobs
-      // are gone (local-mode-exact, same caveat as ccMinLabel's
-      // convergence metrics).
+      // are gone (each observation is the outermost operator of the
+      // frame it checkpoints — the placement Cc.minLabel's scaladoc
+      // shows exact).
       Par.scope(s) { sc =>
         val obsLed = org.apache.spark.sql.Observation()
         val obsB = org.apache.spark.sql.Observation()
@@ -296,13 +298,13 @@ object Wave65Ops extends QueryModule {
         // required to have landed clean just before the commit.
         val fDup = sc.fork(
           b0.join(prevLedger, Seq("doc_id"), "left_semi").limit(1).count())
-        // shuffle width follows the DATA (the ccMinLabel/Wave55
+        // shuffle width follows the DATA (the Cc.minLabel
         // discipline): an ingest wave runs ~30 small exchanges over
         // state + batch frames; core-count width just multiplies
         // task-scheduling overhead at fixture scale while the corpus-
         // sized collapses size it up at 100 TB (~250k rows/partition,
         // floor 4). Counts come from the observations above; the
-        // override lands on the CLONE only. ccMinLabel runs its own
+        // override lands on the CLONE only. Cc.minLabel runs its own
         // width in its own clone — neither sees the other.
         def obsN(o: org.apache.spark.sql.Observation): Long =
           o.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
@@ -453,7 +455,7 @@ object Wave65Ops extends QueryModule {
             "left_semi")
           .join(subG4.withColumnRenamed("id", "b"), Seq("b"),
             "left_semi")
-        val newSubL4 = Wave64Ops.ccMinLabel(iso, subG4, subE4,
+        val newSubL4 = Cc.minLabel(iso, subG4, subE4,
           s"pipe_curation_live:near:b$batchId")
         val newL4 = p(prevL4
           .join(subG4, Seq("id"), "left_anti")
@@ -507,8 +509,8 @@ object Wave65Ops extends QueryModule {
         val subRouted = p(vecAll.join(
           subNodes.withColumnRenamed("id", "vec_id"), Seq("vec_id"),
           "left_semi"))
-        // ccMinLabel already returns a checkpoint-backed frame
-        val newSubL5 = Wave64Ops.ccMinLabel(iso, subNodes,
+        // Cc.minLabel already returns a checkpoint-backed frame
+        val newSubL5 = Cc.minLabel(iso, subNodes,
           Wave64Ops.semPairs(subRouted),
           s"pipe_curation_live:sem:b$batchId")
         // NOT checkpointed (r15): consumed exactly once (the commit's
@@ -794,7 +796,7 @@ object Wave65Ops extends QueryModule {
         // r15 (guide §2.6): the lex and sem match computations are
         // independent — materialize them CONCURRENTLY as honest-stats
         // checkpoints (each feeds both waves' edge filters; the former
-        // lazy persists were first populated inside ccMinLabel's w0
+        // lazy persists were first populated inside Cc.minLabel's w0
         // edge job, serially and with two branches racing the caches)
         val (lex, sem) = Wave64Ops.crossmodalPairs(s, dir)
         val even = (c: String) => col(c) % 2 === 0
@@ -803,7 +805,7 @@ object Wave65Ops extends QueryModule {
         val txroot = Tmp.dir("graft_xmodal_serve")
         val w0edges = lex.filter(even("a") && even("b"))
           .union(sem.filter(even("a") && even("b")))
-        val l0 = Wave64Ops.ccMinLabel(s, docs.filter(even("id")),
+        val l0 = Cc.minLabel(s, docs.filter(even("id")),
           w0edges, "dedup_crossmodal_serve:w0")
         val w0rows = l0.select(lit(0L).as("wave"), col("id"),
           col("comp"))
@@ -829,7 +831,7 @@ object Wave65Ops extends QueryModule {
           .select(col("id").as("a"), col("comp").as("b"))
         val w1edges = lex.filter(!(even("a") && even("b")))
           .union(sem.filter(!(even("a") && even("b"))))
-        val l1 = Wave64Ops.ccMinLabel(s, docs,
+        val l1 = Cc.minLabel(s, docs,
           w1edges.union(links), "dedup_crossmodal_serve:w1")
         val changed = l1
           .join(prev.withColumnRenamed("comp", "pcomp"), Seq("id"),

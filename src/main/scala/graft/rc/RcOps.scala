@@ -257,12 +257,8 @@ object RcOps extends QueryModule {
         import s.implicits._
         val name = s"live_esn_tws_${System.nanoTime()}"
         val mats = Esn.matrices()
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
         graft.StreamRun.withStateParts(s) {
-          s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-            "state.RocksDBStateStoreProvider")
-          try {
+          graft.StreamRun.withRocksDb(s) {
             val in = graft.ops.EventOps.liveEvents(s, dir)
               .select(col("event_id"),
                 unix_micros(col("ts").cast("timestamp")).as("tsUs"),
@@ -275,9 +271,6 @@ object RcOps extends QueryModule {
               .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
               .start()
             q.awaitTermination()
-          } finally prev match {
-            case Some(p) => s.conf.set(key, p)
-            case None => s.conf.unset(key)
           }
         }
         s.table(name)
@@ -475,12 +468,8 @@ object RcOps extends QueryModule {
         import s.implicits._
         val name = s"live_rls_tws_${System.nanoTime()}"
         val mats = Esn.matrices()
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
         graft.StreamRun.withStateParts(s) {
-          s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-            "state.RocksDBStateStoreProvider")
-          try {
+          graft.StreamRun.withRocksDb(s) {
             val in = graft.ops.EventOps.liveEvents(s, dir)
               .select(col("event_id"),
                 unix_micros(col("ts").cast("timestamp")).as("tsUs"),
@@ -493,9 +482,6 @@ object RcOps extends QueryModule {
               .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
               .start()
             q.awaitTermination()
-          } finally prev match {
-            case Some(p) => s.conf.set(key, p)
-            case None => s.conf.unset(key)
           }
         }
         s.table(name)

@@ -43,7 +43,7 @@ object Bridge {
     * SharedState (so the CacheManager still matches persisted plans) and
     * a copy of the catalog. Mutating the clone's conf never touches the
     * parent — the isolation primitive that makes conf-scoped iterative
-    * helpers (ccMinLabel's shuffle-width/broadcast overrides) re-entrant
+    * helpers (Cc.minLabel's shuffle-width/broadcast overrides) re-entrant
     * instead of documented-single-writer.
     */
   def isolatedSession(spark: SparkSession): SparkSession =

@@ -25,11 +25,7 @@ class BootstrapSemdedupSpec extends AnyFunSuite {
       horizonMs: Long = Wave61Ops.DefaultHorizonMs)
       : Set[(Long, Long)] = {
     implicit val sq = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
+    StreamRun.withRocksDb(spark) {
       val mem = MemoryStream[VecIn]
       val initKV = seed.toDS().groupByKey(_._1).mapValues(_._2)
       val sink = s"bootstrap_twin_${System.nanoTime()}"
@@ -52,9 +48,6 @@ class BootstrapSemdedupSpec extends AnyFunSuite {
         spark.table(sink).as[SimHit].collect()
           .map(h => (h.vec_a, h.vec_b)).toSet
       } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
     }
   }
 

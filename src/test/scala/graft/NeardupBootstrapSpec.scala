@@ -37,11 +37,7 @@ class NeardupBootstrapSpec extends AnyFunSuite {
   private def runSeeded(txroot: String, batches: Seq[Seq[DocIn]])
       : Set[(Long, Long)] = {
     implicit val sq = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
+    StreamRun.withRocksDb(spark) {
       val mem = MemoryStream[DocIn]
       val sink = s"bootnd_twin_${System.nanoTime()}"
       val q = Wave58Ops.neardupStreamSeeded(mem.toDS(),
@@ -53,9 +49,6 @@ class NeardupBootstrapSpec extends AnyFunSuite {
         spark.table(sink).as[DupHit].collect()
           .map(h => (h.doc_a, h.doc_b)).toSet
       } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
     }
   }
 

@@ -28,10 +28,10 @@ class PlanLintSpec extends AnyFunSuite {
     "stream_join_static_live", "stream_watermark_append_live",
     "stream_custom_state_live", "stream_stream_join_live",
     "stream_foreachbatch_sink",
-    // iterative label propagation: fn() runs the driver loop eagerly and
-    // returns a read-back scan — the lint's one-static-plan model doesn't
-    // apply (its all-pairs candidate join is the documented exactness
-    // baseline shared with text_dedup_near)
+    // iterative label propagation: fn() runs graft.graph.Cc's loop
+    // eagerly and returns a scan of its final checkpoint — the lint's
+    // one-static-plan model doesn't apply (its all-pairs candidate join
+    // is the documented exactness baseline shared with text_dedup_near)
     "text_dedup_cc")
 
   private val oracleNames = SparkEntry.all.collect {

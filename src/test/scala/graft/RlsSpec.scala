@@ -85,11 +85,7 @@ class RlsSpec extends AnyFunSuite {
     }.toSet
 
     implicit val sq = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
+    StreamRun.withRocksDb(spark) {
       val mem = MemoryStream[EsnIn]
       val sink = s"rls_twin_${System.nanoTime()}"
       val q = StreamingTwins.rlsTws(mem.toDS(), mats, lambda)
@@ -103,9 +99,6 @@ class RlsSpec extends AnyFunSuite {
           .map(o => (o.user_id, o.step, o.w0, o.w1)).toSet
         assert(got === expected)
       } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
     }
   }
 }

@@ -18,10 +18,18 @@ class SessionSpec extends AnyFunSuite {
       "spark.sql.adaptive.coalescePartitions.parallelismFirst") === "false")
     assert(sc.get("spark.locality.wait") === "0s")
     assert(sc.get("spark.ui.enabled") === "false")
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+  }
+
+  test("the session settings come from the factory, not the JVM") {
+    // a -Dspark.* system property would reach every SparkConf in the
+    // JVM and mask a setting the factory lost
+    Seq("spark.sql.session.timeZone", "spark.ui.enabled").foreach { k =>
+      assert(sys.props.get(k) === None, s"$k is a JVM system property")
+    }
   }
 
   test("a caller's own settings ride along") {
-    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
     assert(spark.sparkContext.appName === "graft-test")
   }
 }

@@ -68,6 +68,16 @@ class SourceLintSpec extends AnyFunSuite {
         "settings that belong to the caller:\n" + found.mkString("\n"))
   }
 
+  test("the RocksDB state store is chosen only by StreamRun.withRocksDb") {
+    // the name is split so that this file does not match itself
+    val found = Seq(main, testSrc).flatMap(root => hits(
+      ("RocksDB" + "StateStoreProvider").r, "graft/Q.scala", root))
+    assert(found.isEmpty,
+      "run a stateful stream inside graft.StreamRun.withRocksDb, which " +
+        "restores the session's previous provider:\n" +
+        found.mkString("\n"))
+  }
+
   test("the extensions conf is set only by graft.Session") {
     val found = Seq(main, testSrc).flatMap(root => hits(
       """"spark\.sql\.extensions"""".r, "graft/Session.scala", root))

@@ -36,11 +36,7 @@ class StreamNeardupSpec extends AnyFunSuite {
   private def runStream(batches: Seq[Seq[DocIn]],
       horizonMs: Long = Wave58Ops.DefaultHorizonMs): Set[(Long, Long)] = {
     implicit val sq = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
+    StreamRun.withRocksDb(spark) {
       val mem = MemoryStream[DocIn]
       val sink = s"neardup_twin_${System.nanoTime()}"
       val q = Wave58Ops.neardupStream(mem.toDS(), horizonMs).toDF()
@@ -51,9 +47,6 @@ class StreamNeardupSpec extends AnyFunSuite {
         spark.table(sink).as[DupHit].collect()
           .map(h => (h.doc_a, h.doc_b)).toSet
       } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
     }
   }
 

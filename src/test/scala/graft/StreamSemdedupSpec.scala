@@ -35,11 +35,7 @@ class StreamSemdedupSpec extends AnyFunSuite {
       horizonMs: Long = Wave61Ops.DefaultHorizonMs)
       : Set[(Long, Long)] = {
     implicit val sq = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
+    StreamRun.withRocksDb(spark) {
       val mem = MemoryStream[VecIn]
       val sink = s"semdedup_twin_${System.nanoTime()}"
       val q = Wave61Ops.semdedupStream(mem.toDS(), horizonMs).toDF()
@@ -50,9 +46,6 @@ class StreamSemdedupSpec extends AnyFunSuite {
         spark.table(sink).as[SimHit].collect()
           .map(h => (h.vec_a, h.vec_b)).toSet
       } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None => spark.conf.unset(key)
     }
   }
 

@@ -91,24 +91,13 @@ class StreamingTwinSpec extends AnyFunSuite {
     val in = sample.take(300).map(e => StreamingTwins.EsnIn(e.event_id,
       e.ts.getTime * 1000, e.user_id, e.value))
     implicit val sq = spark.sqlContext
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    StreamRun.withRocksDb(spark) {
       val mem = MemoryStream[StreamingTwins.EsnIn]
       val q = StreamingTwins.esnStatesTws(mem.toDS(), m)
         .writeStream.format("memory").queryName("esn_tws")
         .outputMode("append").start()
       mem.addData(in.take(150).toSeq); q.processAllAvailable()
       mem.addData(in.drop(150).toSeq); q.processAllAvailable(); q.stop()
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
     val tws = spark.table("esn_tws").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))

@@ -6,7 +6,6 @@ import org.apache.spark.sql.SparkSession
   * own factory so the suite runs under the settings graft ships. */
 object TestSpark {
   lazy val spark: SparkSession = Session.local(4,
-    "spark.app.name" -> "graft-test",
-    "spark.sql.session.timeZone" -> "UTC")
+    "spark.app.name" -> "graft-test")
   val Sf = "/root/testdata/sf0.001"
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.graph.Cc
 import graft.ops.{Wave62Ops, Wave63Ops, Wave64Ops}
 import graft.sources.SnapTxn
 import org.apache.spark.sql.functions._
@@ -10,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - crossmodal components: a doc tied to its cluster by only ONE
   *    modality still lands in the right component (the whole point of
   *    unioning the match graphs before CC);
-  *  - ccMinLabel semantics on a hand-built graph (chain bridging,
+  *  - Cc.minLabel semantics on a hand-built graph (chain bridging,
   *    singletons, convergence);
   *  - the funnel's lineage arithmetic: stage k's rows_in equals stage
   *    k-1's rows_out, drops are non-negative, token mass only shrinks;
@@ -28,7 +29,7 @@ class Wave64Spec extends AnyFunSuite {
     val nodes = Seq(1L, 2L, 3L, 4L).toDF("id")
     val lex = Seq((1L, 2L)).toDF("a", "b")
     val sem = Seq((2L, 3L)).toDF("a", "b")
-    val comp = Wave64Ops.ccMinLabel(spark, nodes, lex.union(sem), "spec")
+    val comp = Cc.minLabel(spark, nodes, lex.union(sem), "spec")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L))
   }
@@ -39,7 +40,7 @@ class Wave64Spec extends AnyFunSuite {
     // deliberately mixed orientation and a diameter-4 chain
     val edges = Seq((11L, 10L), (11L, 12L), (13L, 12L), (13L, 14L))
       .toDF("a", "b")
-    val comp = Wave64Ops.ccMinLabel(spark, nodes, edges, "spec")
+    val comp = Cc.minLabel(spark, nodes, edges, "spec")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp.values.toSet === Set(10L))
   }
@@ -82,16 +83,16 @@ class Wave64Spec extends AnyFunSuite {
       "old components collapse to links, new edges bridge across them") {
     val all = (1L to 6L).toDF("id")
     val w0 = Seq((2L, 4L), (4L, 6L)).toDF("a", "b") // even-only wave
-    val l0 = Wave64Ops.ccMinLabel(spark, all.filter($"id" % 2 === 0),
+    val l0 = Cc.minLabel(spark, all.filter($"id" % 2 === 0),
       w0, "spec:w0")
     // star links: one id→comp edge per previously-labeled non-root
     val links = l0.filter($"id" =!= $"comp")
       .select($"id".as("a"), $"comp".as("b"))
     val w1 = Seq((1L, 3L), (3L, 6L)).toDF("a", "b") // odd + bridge
-    val incr = Wave64Ops.ccMinLabel(spark, all, w1.union(links),
+    val incr = Cc.minLabel(spark, all, w1.union(links),
       "spec:w1")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val full = Wave64Ops.ccMinLabel(spark, all, w0.union(w1),
+    val full = Cc.minLabel(spark, all, w0.union(w1),
       "spec:full")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(incr === full)

@@ -1,6 +1,7 @@
 package graft
 
-import graft.ops.{Wave64Ops, Wave66Ops}
+import graft.graph.Cc
+import graft.ops.{GraphBase, Wave64Ops, Wave66Ops}
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
@@ -17,10 +18,11 @@ import org.apache.spark.sql.functions._
   *    salted rule is the direct rule;
   *  - the graded op equals text_dedup_near's pair set on the real
   *    sf0.001 slice (two independent formulations, one edge set);
-  *  - ccMinLabel RE-ENTRANCY (§18.1 #4): two concurrent calls on ONE
-  *    session produce correct labels while a watcher thread observes
-  *    the caller session's shuffle-width and broadcast confs never
-  *    move — the cloned-session isolation, raced rather than asserted.
+  *  - CC RE-ENTRANCY (§18.1 #4): two concurrent Cc.minLabel calls and
+  *    a concurrent graph_connected_components run on ONE session
+  *    produce correct labels while a watcher thread observes the caller
+  *    session's shuffle-width and broadcast confs never move — the
+  *    cloned-session isolation, raced rather than asserted.
   */
 class Wave66Spec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -261,27 +263,39 @@ class Wave66Spec extends AnyFunSuite {
       val fChain = Future {
         val nodes = (1L to 6L).toDF("id")
         val edges = (1L to 5L).map(i => (i, i + 1)).toDF("a", "b")
-        Wave64Ops.ccMinLabel(spark, nodes, edges, "spec:chain")
+        Cc.minLabel(spark, nodes, edges, "spec:chain")
           .as[(Long, Long)].collect().toMap
       }
       val fTri = Future {
         val nodes = (11L to 16L).toDF("id")
         val edges = Seq((11L, 12L), (12L, 13L), (13L, 11L),
           (14L, 15L), (15L, 16L), (16L, 14L)).toDF("a", "b")
-        Wave64Ops.ccMinLabel(spark, nodes, edges, "spec:tri")
+        Cc.minLabel(spark, nodes, edges, "spec:tri")
           .as[(Long, Long)].collect().toMap
+      }
+      // a graded op on the kernel, against the same session
+      val fGraph = Future {
+        SparkEntry.queries("graph_connected_components")(spark,
+          TestSpark.Sf).as[(Long, Long)].collect().toSeq
       }
       val chain = Await.result(fChain, 5.minutes)
       val tri = Await.result(fTri, 5.minutes)
+      val graph = Await.result(fGraph, 5.minutes)
       assert(chain === (1L to 6L).map(_ -> 1L).toMap)
       assert(tri === ((11L to 13L).map(_ -> 11L) ++
         (14L to 16L).map(_ -> 14L)).toMap)
+      val e = GraphBase.edges(spark, TestSpark.Sf)
+        .select("u", "v").as[(Long, Long)].collect().toSeq
+      val top20 = CcSpec.components(e.flatMap(p => Seq(p._1, p._2)), e)
+        .groupBy(_._2).map { case (c, m) => (c, m.size.toLong) }.toSeq
+        .sortBy { case (c, n) => (-n, c) }.take(20)
+      assert(graph === top20)
     } finally {
       done = true
       watcher.join()
     }
     assert(drift.isEmpty,
-      s"caller session conf moved during concurrent ccMinLabel: $drift")
+      s"caller session conf moved during concurrent CC runs: $drift")
     assert(spark.conf.get(partsKey) === parts0)
     assert(spark.conf.get(bcKey) === bc0)
   }

@@ -3,6 +3,9 @@ package org.apache.spark
 /** Test access to `private[spark]` SparkContext internals. */
 object GraftTestHooks {
 
+  /** Waits until every event already posted has reached every listener. */
+  def drainEvents(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   /** Ids of the jobs of job group `group` still active once every event
     * already posted has reached the status store, polled for up to
     * `settleMs` until none is left; the last read is returned.
